@@ -27,51 +27,14 @@ from __future__ import annotations
 import json
 import os
 
-from weakref import WeakKeyDictionary
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dataweb_spark.functions.dedup import (_norm_fingerprint, jaccard_pd,
                                            minhash_band_hashes)
+from dataweb_spark.sources.readers import content_memo
 
 _META = "meta.json"
-
-# Per-session memo of index metadata reads (r16, guide §1.2/§5 driver
-# overhead): every classify/append call re-read ``meta.json`` through the
-# Hadoop FS API (~5 py4j round-trips) and rebuilt each table DataFrame
-# (a driver-side file listing per read) for tables whose content only
-# changes through this module's own writers. Entries are keyed on the
-# same cheap local content signature the source-read memo uses
-# (``sources.readers._path_signature``: dir mtime + immediate-children
-# stats), so any append/compact/rebuild — including one from another
-# process — drops the entry; memoization is refused wherever the
-# signature cannot see the content (non-local fs.defaultFS, nested or
-# >1024-children layouts). Holds name→plan bindings only — every query
-# still scans the parquet files.
-_INDEX_MEMO: "WeakKeyDictionary[SparkSession, dict]" = WeakKeyDictionary()
-
-
-def _memo_get(spark: SparkSession, key: tuple, sig_path: str,
-              build) -> object:
-    """``build()`` result memoized per (session, key) under the content
-    signature of ``sig_path``; unsignable paths are never memoized."""
-    from dataweb_spark.sources.readers import (_default_fs_is_local,
-                                               _path_signature)
-
-    if spark is None or not _default_fs_is_local(spark):
-        return build()
-    sig = _path_signature(sig_path)
-    if sig is None:
-        return build()
-    memo = _INDEX_MEMO.setdefault(spark, {})
-    hit = memo.get(key)
-    if hit is not None and hit[0] == sig:
-        return hit[1]
-    out = build()
-    memo[key] = (sig, out)
-    return out
-
 
 def _hadoop_fs(spark: SparkSession, path: str):
     jvm = spark._jvm
@@ -137,8 +100,8 @@ def read_index_table(spark: SparkSession, path: str, table: str,
 
     # r16: the frame pins its file listing at read time, so it is reused
     # only while the table dir's content signature is unchanged — any
-    # append/compact drops the entry (see _INDEX_MEMO).
-    return _memo_get(spark, ("table", p, sch), p, _build)
+    # append/compact drops the entry (see readers.content_memo).
+    return content_memo(spark, ("table", p, sch), p, _build)
 
 
 def _index_rows(df: DataFrame, id_col: str, text_col: str,
@@ -199,10 +162,10 @@ def load_params_file(path: str, kind: str,
             return text
         # r16: the params file is rewritten only by a rebuild; memoize
         # the raw TEXT under the file's content signature (see
-        # _INDEX_MEMO) — a classify/append pair paid ~10 py4j
+        # readers.content_memo) — a classify/append pair paid ~10 py4j
         # round-trips per batch re-reading it otherwise. Parsed fresh
         # per call so callers can never mutate a shared dict.
-        return json.loads(_memo_get(spark, ("meta", meta), meta, _build))
+        return json.loads(content_memo(spark, ("meta", meta), meta, _build))
     if not os.path.exists(meta):
         raise ValueError(f"not {kind} (missing {_META}): {path}")
     with open(meta) as f:

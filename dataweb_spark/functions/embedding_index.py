@@ -111,23 +111,19 @@ def classify_embedding_batch(spark: SparkSession, new_batch: DataFrame,
     tables stream.  Verification is exact cosine over candidate pairs
     only — banded LSH bounds the candidate count, and false "near"s are
     impossible (every verdict is verified); misses are the standard LSH
-    recall trade, tuned by bands × planes."""
-    # r16 (judge item 5): the batch cache is released by generation
-    # rotation — the next classify call unpersists it (the CacheManager
-    # never GC-frees SQL caches; eager materialize-before-return was
-    # tried first and measured ~0.3-0.5 s slower — the checkpoint splits
-    # the verify pipeline's fused execution).
-    from dataweb_spark.session import rotate_evict, rotate_register
+    recall trade, tuned by bands × planes.
 
-    # evict BEFORE persisting: the CacheManager dedupes identical plans,
-    # so a same-batch re-invocation would otherwise persist into the
-    # entry the eviction is about to remove (see session.rotate_persist)
-    key = new_batch.semanticHash()
-    rotate_evict(spark, "embedding_index.classify", key)
+    The verdict (one narrow row per batch vector) is materialized
+    eagerly and the batch cache is released before returning — the
+    CacheManager holds SQL caches until an explicit unpersist, so a
+    long-lived gate would otherwise keep one dead cache per batch."""
     lazy, caches = _classify_embedding_plan(spark, new_batch, path,
                                             threshold)
-    rotate_register(spark, "embedding_index.classify", key, caches)
-    return lazy
+    try:
+        return lazy.localCheckpoint(eager=True)
+    finally:
+        for df in caches:
+            df.unpersist()
 
 
 def _classify_embedding_plan(spark: SparkSession, new_batch: DataFrame,

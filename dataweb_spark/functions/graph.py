@@ -130,9 +130,9 @@ def _pagerank_iterations(edges: DataFrame, nodes: DataFrame,
     from dataweb_spark.session import rotate_persist
 
     edges = edges.select(F.col(src), F.col(dst))
-    # r16 (judge item 5): the degree cache is released by generation
-    # rotation — the next pagerank call unpersists it (the CacheManager
-    # never GC-frees SQL caches). Materializing the final rank vector
+    # The degree cache is released by generation rotation: a re-run on
+    # the same edges replaces it and at most _ROTATE_CAP stay live (the
+    # CacheManager never GC-frees SQL caches). Materializing the final rank vector
     # eagerly to allow an in-call unpersist was tried FIRST and measured
     # 2.3 → 4.8 s on graph_pagerank_domains (the eager checkpoint splits
     # the consumer's fused execution per loop), so per guide §1 it was

@@ -51,8 +51,8 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
-def dot_pd(a: Column, b: Column) -> Column:
-    """Arrow-batched dot product — the bulk-scoring kernel.
+def cosine_pd(a: Column, b: Column) -> Column:
+    """Arrow-batched cosine — bulk kernel for approximate paths.
 
     (UDF created per call: registration needs an active SparkSession,
     so module import stays session-free.)"""
@@ -60,24 +60,12 @@ def dot_pd(a: Column, b: Column) -> Column:
     def f(x: pd.Series, y: pd.Series) -> pd.Series:
         A = np.array(x.tolist(), dtype=np.float64)
         B = np.array(y.tolist(), dtype=np.float64)
-        return pd.Series(np.einsum("ij,ij->i", A, B))
-    # asNondeterministic: stop the optimizer duplicating the kernel when
-    # a pushed filter references its output column (guide §4.4); the
-    # function itself is deterministic.
-    return f.asNondeterministic()(a, b)
-
-
-def cosine_pd(a: Column, b: Column) -> Column:
-    """Arrow-batched cosine — bulk kernel for approximate paths."""
-    @pandas_udf("double")
-    def f(x: pd.Series, y: pd.Series) -> pd.Series:
-        A = np.array(x.tolist(), dtype=np.float64)
-        B = np.array(y.tolist(), dtype=np.float64)
         num = np.einsum("ij,ij->i", A, B)
         den = np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1)
         return pd.Series(num / np.maximum(den, 1e-300))
-    # asNondeterministic: see dot_pd — prevents double evaluation under
-    # pushed threshold filters (guide §4.4).
+    # asNondeterministic: stop the optimizer duplicating the kernel when
+    # a pushed threshold filter references its output column (guide
+    # §4.4); the function itself is deterministic.
     return f.asNondeterministic()(a, b)
 
 

@@ -89,20 +89,6 @@ def _conjuncts_from_condition(jexpr, out: list[Conjunct]) -> None:
         out.append((str(col.name()).split(".")[-1].lower(), o, v))
 
 
-def _relations_under(jplan) -> set[str]:
-    rels: set[str] = set()
-    stack = [jplan]
-    while stack:
-        node = stack.pop()
-        if node.getClass().getSimpleName() == "UnresolvedRelation":
-            parts = node.multipartIdentifier()
-            rels.add(str(parts.apply(parts.size() - 1)).lower())
-        ch = node.children()
-        for i in range(ch.size()):
-            stack.append(ch.apply(i))
-    return rels
-
-
 # Nodes that may sit between a Filter and the base relation without
 # renaming, deriving, or aggregating columns. Anything else (Project with
 # aliases, Aggregate, Window, Distinct, ...) can expose a column whose NAME

@@ -35,7 +35,9 @@ from dataweb_spark.catalog.model import DataConnection, DataSource
 
 _IDENT = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
 
-# File-read memo: session → {(fmt, path, opts...) → (content_sig, DataFrame)}.
+# Content-signature memo (:func:`content_memo`): session → {key →
+# (content_sig, value)}, shared by file-source reads and the persisted
+# indexes' ``meta.json`` text and table frames (``dedup_index``).
 # A `spark.read.load` on a file source costs a driver-side schema inference
 # (parquet footer reads / a CSV sampling pass) EVERY call; federated gateway
 # calls re-read the same physical tables once per query (and once per round
@@ -99,6 +101,23 @@ def _path_signature(path: str):
         return None
     kids.sort()
     return (st.st_mtime_ns, tuple(kids))
+
+
+def content_memo(spark: SparkSession, key: tuple, path: str, build):
+    """``build()`` memoized per (session, key) under the content signature
+    of ``path`` (see ``_READ_MEMO``); unsignable paths are never
+    memoized."""
+    sig = _path_signature(path) if _default_fs_is_local(spark) else None
+    if sig is None:
+        return build()
+    memo = _READ_MEMO.setdefault(spark, {})
+    hit = memo.get(key)
+    if hit is not None and hit[0] == sig:
+        return hit[1]
+    out = build()
+    memo[key] = (sig, out)
+    return out
+
 
 _FLOATS = ("float", "double")
 
@@ -583,21 +602,18 @@ def read_connection_table(spark: SparkSession, conn: DataConnection,
         header = source.options.get("header", "true")
         infer = source.options.get("inferSchema", "true")
         schema = source.options.get("schema")
-        key = (fmt, path, header, infer, str(schema))
-        sig = _path_signature(path) if _default_fs_is_local(spark) else None
-        memo = _READ_MEMO.setdefault(spark, {})
-        if sig is not None and key in memo and memo[key][0] == sig:
-            return memo[key][1], None
-        reader = spark.read
-        if fmt == "csv":
-            reader = reader.option("header", header) \
-                           .option("inferSchema", infer)
-        if schema is not None:
-            reader = reader.schema(schema)
-        raw = reader.format(fmt).load(path)
-        if sig is not None:
-            memo[key] = (sig, raw)
-        return raw, None
+
+        def _load():
+            reader = spark.read
+            if fmt == "csv":
+                reader = reader.option("header", header) \
+                               .option("inferSchema", infer)
+            if schema is not None:
+                reader = reader.schema(schema)
+            return reader.format(fmt).load(path)
+
+        return content_memo(spark, (fmt, path, header, infer, str(schema)),
+                            path, _load), None
     if conn.kind == "view":
         return spark.table(source.options.get("table", source.name)), None
     if conn.kind == "flight":

@@ -140,6 +140,16 @@ def test_gate_admits_novel_rejects_copies_across_batches(spark, corpus,
     assert out.verdict == "near" and out.match_id == 9901
 
 
+def test_classify_releases_sql_caches(spark, corpus, index_path):
+    """classify returns a materialized verdict and leaves no SQL cache
+    behind — a long-lived gate classifies one batch per micro-batch."""
+    batch = _batch(spark, corpus).drop("src_id")
+    spark.catalog.clearCache()
+    out = E.classify_embedding_batch(spark, batch, index_path)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert out.count() == batch.count()
+
+
 def test_classify_plan_has_no_cartesian(spark, corpus, index_path):
     # r16: the public classify returns an eagerly-materialized verdict
     # (its own plan is an RDD scan) — assert on the LAZY plan that the

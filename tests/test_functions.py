@@ -123,6 +123,20 @@ def test_embedding_near_dups_planted(spark, emb):
     assert (5, 77777) in hits
 
 
+@pytest.mark.parametrize("op", [
+    lambda docs, emb: dedup.minhash_lsh_candidates(docs, "doc_id", "text"),
+    lambda docs, emb: dedup.simhash_candidates(docs, "doc_id"),
+    lambda docs, emb: dedup.embedding_near_dups(emb, threshold=0.99),
+], ids=["minhash", "simhash", "embedding"])
+def test_lsh_candidates_release_sql_caches(spark, docs, emb, op):
+    """The banded-LSH operators persist their signature proxy only for
+    the call: once the result is consumed the CacheManager (which never
+    frees SQL caches on GC) holds nothing from them."""
+    spark.catalog.clearCache()
+    op(docs, emb).count()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 # -- similarity -----------------------------------------------------------
 
 def test_brute_force_topk_self_similarity(spark, emb):

@@ -165,22 +165,39 @@ def test_pagerank_warm_restart_duplicate_prior_rows(spark):
 
 
 def test_pagerank_degree_cache_bounded_by_rotation(spark):
-    """r16 (judge item 5): the CacheManager never GC-frees SQL caches,
-    so each pagerank call would leak one O(nodes) out_deg cache for the
-    session lifetime. The cleanup is GENERATION ROTATION (the next call
-    unpersists the previous call's cache — eager in-call release was
-    measured 2× slower, see graph.py): the persistent-block census must
-    not grow call over call."""
+    """The CacheManager never GC-frees SQL caches, and pagerank's lazy
+    rank vector needs its O(nodes) out_deg cache past the call (eager
+    in-call release was measured 2× slower, see graph.py), so the cache
+    is released by GENERATION ROTATION: a repeat on the same edges
+    replaces its own generation — the persistent-block census does not
+    grow call over call — and distinct inputs keep at most
+    ``_ROTATE_CAP`` generations live, unpersisting the oldest."""
+    from pyspark import StorageLevel
+
+    from dataweb_spark import session
+
     spark.catalog.clearCache()
     pairs = [(i % 13, (i * 7 + 1) % 13) for i in range(100)]
 
     def n_persistent():
         return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
 
-    sizes = []
+    sizes, keys = [], []
     for _ in range(3):
         out = G.pagerank_integer(_edges(spark, pairs), k=3)
         assert out.count() == 13
         sizes.append(n_persistent())
+        gens = session._PROXY_GENERATIONS[spark]["graph.pagerank.out_deg"]
+        keys.append(list(gens))
     assert sizes[0] == sizes[1] == sizes[2], \
         f"pagerank cache grew across calls: {sizes}"
+    assert keys[0] == keys[1] == keys[2]
+
+    first = None
+    for i in range(1, session._ROTATE_CAP + 3):
+        G.pagerank_integer(_edges(spark, [(0, i), (i, 0)]), k=1).collect()
+        if first is None:
+            first = next(reversed(gens.values()))
+        assert len(gens) <= session._ROTATE_CAP
+    assert len(gens) == session._ROTATE_CAP
+    assert first.storageLevel == StorageLevel.NONE

@@ -24,6 +24,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
 
+    from bench import _calibration
     from dataweb_spark.queries import queries, register_views
     from dataweb_spark.session import get_spark
 
@@ -39,14 +40,7 @@ def main() -> None:
     spark.range(10_000).repartition(64).select(_warm(col("id"))).count()
 
     qs = queries()
-    # calibration probe identical to bench.py
-    samples = []
-    for _ in range(3):
-        t0 = time.time()
-        spark.table("lineitem").count()
-        qs["tpch_q1_pricing_summary"](spark, sf_dir).count()
-        samples.append(time.time() - t0)
-    calib = round(sorted(samples)[1], 3)
+    calib = _calibration(spark, qs, sf_dir)
     print(f"# calibration: {calib}s", file=sys.stderr)
 
     out = {}
