@@ -47,15 +47,6 @@ MEDIA_SCHEMA = StructType([
     ])),
 ])
 
-FEATURE_SCHEMA = StructType([
-    StructField("media_id", LongType()),
-    StructField("n_bytes", LongType()),
-    StructField("byte_mean", DoubleType()),
-    StructField("byte_entropy", DoubleType()),
-    StructField("phash64", LongType()),
-])
-
-
 def _synth_range(spark, n: int):
     """``spark.range(n)`` sized to the work: ``min(n, defaultParallelism)``
     partitions. A bare ``range(n)`` always splits into defaultParallelism
@@ -2328,51 +2319,6 @@ def extract_image_features(media: DataFrame) -> DataFrame:
         kernel, schema=IMAGE_FEATURE_SCHEMA)
 
 
-def _entropy(counts) -> float:
-    import numpy as np
-    p = counts / max(1, counts.sum())
-    nz = p[p > 0]
-    return float(-(nz * np.log2(nz)).sum())
-
-
-def extract_features(media: DataFrame,
-                     batch_size: int = 256) -> DataFrame:
-    """Byte-level feature extraction via Arrow-batched ``mapInPandas``.
-
-    A stand-in for decode→feature (CLIP/pHash/mel-spec): computes per-blob
-    byte statistics and a deterministic 64-bit pseudo-pHash. The UDF shape
-    (Iterator[pd.DataFrame] → Iterator[pd.DataFrame]) is exactly what a real
-    decoder uses — swap the kernel, keep the plumbing.
-    """
-    import numpy as np
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                arr = np.frombuffer(content or b"", dtype=np.uint8)
-                if arr.size == 0:
-                    out.append((mid, 0, 0.0, 0.0, 0))
-                    continue
-                counts = np.bincount(arr, minlength=256)
-                # pseudo-pHash: sign bits of 64 evenly spaced byte deltas
-                idx = np.linspace(0, arr.size - 1, 65).astype(int)
-                deltas = arr[idx[1:]].astype(int) - arr[idx[:-1]].astype(int)
-                ph = 0
-                for i, d in enumerate(deltas):
-                    if d > 0:
-                        ph |= (1 << i)
-                ph = ph - (1 << 64) if ph >= (1 << 63) else ph
-                out.append((mid, int(arr.size), float(arr.mean()),
-                            round(_entropy(counts), 6), ph))
-            yield pd.DataFrame(out, columns=["media_id", "n_bytes",
-                                             "byte_mean", "byte_entropy",
-                                             "phash64"])
-
-    return media.select("media_id", "content").mapInPandas(
-        kernel, schema=FEATURE_SCHEMA)
-
-
 def _box_resize(px, width: int, height: int):
     """Integer-grid box-average resample of an (H, W, 3) uint8 raster to
     ``width × height``: target cell (X, Y) is the floor-of-mean of source
@@ -2877,26 +2823,6 @@ def extract_frame_features(frames: DataFrame) -> DataFrame:
 
     return frames.mapInPandas(kernel, schema=FRAME_FEATURE_SCHEMA)
 
-
-def resize_stub(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Resize plumbing for blobs in formats WITHOUT a real decoder here
-    (jpg/mp4): updates metadata, passes content through the same
-    mapInPandas shape ``resize_media`` uses for decodable formats."""
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            # real impl (see resize_media): decode → resample → re-encode
-            yield pdf
-
-    resized = media.select("media_id", "kind", "content").mapInPandas(
-        kernel, schema=StructType([
-            StructField("media_id", LongType()),
-            StructField("kind", StringType()),
-            StructField("content", BinaryType())]))
-    return resized.withColumn(
-        "meta", F.struct(F.lit("fake").alias("format"),
-                         F.lit(width).cast("int").alias("width"),
-                         F.lit(height).cast("int").alias("height"),
-                         F.lit(None).cast("double").alias("duration_s")))
 
 
 def frame_sample_stub(media: DataFrame, every_s: float = 1.0) -> DataFrame:

@@ -696,20 +696,6 @@ def bigram_lm_scores(df: DataFrame, id_col: str = "doc_id",
                         .alias("perplexity")))
 
 
-def with_text_stats(df: DataFrame, col: str = "text") -> DataFrame:
-    """Convenience: attach the full text-analysis column set."""
-    return (df
-            .withColumn("n_chars_computed", char_count(col))
-            .withColumn("n_tokens", token_count(col))
-            .withColumn("n_tokens_bpe", bpe_ish_token_count(col))
-            .withColumn("punct_ratio", F.round(punct_ratio(col), 6))
-            .withColumn("stopword_ratio", F.round(stopword_ratio(col), 6))
-            .withColumn("mean_word_len", F.round(mean_word_length(col), 6))
-            .withColumn("quality", quality_score(col))
-            .withColumn("lang_pred", lang_id(col))
-            .withColumn("fingerprint", fingerprint(col)))
-
-
 # ===========================================================================
 # HTML → text extraction (the C4/RefinedWeb ingestion front door)
 # ===========================================================================

@@ -36,7 +36,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dataweb_spark.catalog.model import Web
-from dataweb_spark.plans.gateway import QueryGateway
+from dataweb_spark.plans.gateway import (
+    PushdownFacts,
+    QueryGateway,
+    pushdown_facts,
+)
 from dataweb_spark.plans.resolve import (
     PROVENANCE_RELAY,
     PROVENANCE_SOURCE,
@@ -121,10 +125,9 @@ class JobManager:
         """
         if mode not in ("template", "engine"):
             raise ValueError(f"unknown mode {mode!r}")
-        entities = validate_sql(self.spark, sql,
-                                single_entity=(mode == "template"))
+        q = validate_sql(self.spark, sql, single_entity=(mode == "template"))
         relay = self.web.relay(self.relay_name)
-        unknown = {e for e in entities if e not in relay.entities}
+        unknown = {e for e in q.entities if e not in relay.entities}
         if unknown:
             raise ValidationError(
                 f"unknown entity(ies): {sorted(unknown)}; "
@@ -137,8 +140,11 @@ class JobManager:
                           relay=self.relay_name, source="__engine__")
             job.tasks[t.task_id] = t
             plan = [(t, None, None)]
+            facts = None
         else:
-            entity = next(iter(entities))
+            # derived once here; each task reads its source entity's slice
+            facts = pushdown_facts(q, relay.entities, topk=False)
+            entity = next(iter(q.entities))
             plan = []
             visited: set[tuple[str, str]] = set()
 
@@ -163,12 +169,13 @@ class JobManager:
         with self._lock:
             self._jobs[job.job_id] = job
         for t, r, source in plan:
-            self._pool.submit(self._run_task, job, t, r, source)
+            self._pool.submit(self._run_task, job, t, r, source, facts)
         return job.job_id
 
     # -- worker ----------------------------------------------------------
 
-    def _run_task(self, job: QueryJob, task: QueryTask, relay, source) -> None:
+    def _run_task(self, job: QueryJob, task: QueryTask, relay, source,
+                  facts: PushdownFacts | None) -> None:
         if job.cancel_requested:
             if task.status == QUEUED:
                 task.status = CANCELLED
@@ -188,20 +195,12 @@ class JobManager:
                 if job.mode == "engine":
                     df = self.gateway.query(job.sql, job.principal)
                 else:
-                    from dataweb_spark.plans.pruning import (
-                        extract_entity_limit,
-                        extract_entity_predicates,
-                        extract_referenced_columns,
-                    )
+                    entity = source.entity
                     view = build_source_view(
                         self.spark, relay, source, job.principal,
-                        conjuncts=extract_entity_predicates(
-                            self.spark, job.sql, source.entity),
-                        limit=extract_entity_limit(
-                            self.spark, job.sql, source.entity),
-                        referenced=extract_referenced_columns(
-                            self.spark, job.sql))
-                    entity = source.entity
+                        conjuncts=facts.conjuncts.get(entity, []),
+                        limit=facts.limits.get(entity),
+                        referenced=facts.referenced)
                     view.drop(PROVENANCE_RELAY, PROVENANCE_SOURCE) \
                         .createOrReplaceTempView(entity)
                     # may shadow a canonical table name — invalidate the
@@ -239,6 +238,9 @@ class JobManager:
             "status": job.status,
             "mode": job.mode,
             "principal": job.principal,
+            # a cancel that lands mid-run returns before the interrupted
+            # task settles; the flag says the worker will stop it
+            "cancel_requested": job.cancel_requested,
             "tasks": [
                 {"task_id": t.task_id, "relay": t.relay, "source": t.source,
                  "status": t.status, "n_rows": t.n_rows, "error": t.error,

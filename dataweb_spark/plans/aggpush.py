@@ -11,8 +11,8 @@ forwards it whole to identity flight peers — ``flight_forward_template``)
 and merges the partials with Spark aggregation, reproducing engine-mode
 semantics exactly.
 
-Everything is plan-driven: the query is parsed with Spark's own parser,
-the accepted shape is validated node-by-node, and clause text is
+Everything is plan-driven: the plan ``validate_sql`` parsed with Spark's
+own parser is validated node-by-node, and clause text is
 regenerated with Catalyst's ``Expression.sql()`` — no regex surgery on
 user SQL. Anything outside the accepted shape (non-distributive
 aggregates, scalar wrappers around aggs, subqueries, expressions in
@@ -40,9 +40,11 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DecimalType
+
+from dataweb_spark.plans.validation import ParsedQuery
 
 _AGG_FNS = {"count", "sum", "min", "max", "avg"}
 
@@ -597,8 +599,7 @@ def _rewrite_having(spark, jcond, spec: AggQuerySpec,
     return True
 
 
-def extract_aggregate_query(spark: SparkSession, sql: str,
-                            entity: str,
+def extract_aggregate_query(q: ParsedQuery, entity: str,
                             entity_columns: set[str] | None = None,
                             entity_types: dict[str, str] | None = None
                             ) -> AggQuerySpec | None:
@@ -614,12 +615,9 @@ def extract_aggregate_query(spark: SparkSession, sql: str,
     at decimal(38, s) and NO SQL division can keep avg's s+4 quotient
     digits (the engine divides at unbounded internal precision) — those
     queries keep the row path."""
-    try:
-        jplan = spark._jsparkSession.sessionState().sqlParser().parsePlan(sql)
-    except Exception:
-        return None
+    spark = q.spark
     spec = AggQuerySpec(entity=entity)
-    node = jplan
+    node = q.plan
 
     if _cls(node) == "GlobalLimit":
         lim = node.limitExpr()

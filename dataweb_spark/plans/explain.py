@@ -47,6 +47,7 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 
 from dataweb_spark.catalog.model import Web
+from dataweb_spark.plans.validation import ParsedQuery, validate_sql
 
 EXPLAIN_COLUMNS = ["entity", "relay", "source", "kind", "action",
                    "pushed_sql", "pushed_filters", "projected",
@@ -54,8 +55,8 @@ EXPLAIN_COLUMNS = ["entity", "relay", "source", "kind", "action",
                    "forwarded_grouped", "forwarded_template"]
 
 
-def _template_forward(spark: SparkSession, web: Web, relay_name: str,
-                      entity_name: str, sql: str,
+def _template_forward(web: Web, relay_name: str, entity_name: str,
+                      q: ParsedQuery,
                       partial_aggregate: bool = True,
                       topk_pushdown: bool = True):
     """``(template_sql, agg_spec)`` — the template SQL ``gateway.query``
@@ -82,65 +83,46 @@ def _template_forward(spark: SparkSession, web: Web, relay_name: str,
                or _engine_agg_candidate(relay, s)
                for s in relay.sources_for_entity(entity_name)):
         return None, None
-    spec, fwd, _ = _decomposed_template(spark, entity, entity_name, sql,
-                                        partial_aggregate, topk_pushdown)
+    spec, fwd = _decomposed_template(q, entity, entity_name,
+                                     partial_aggregate, topk_pushdown)
     return fwd, (spec if isinstance(spec, AggQuerySpec) else None)
 
 
-def explain_entity(spark: SparkSession, web: Web, relay_name: str,
-                   entity_name: str, sql: str,
-                   principal: str | None = None,
-                   single_entity: bool = False,
+def explain_entity(web: Web, relay_name: str, entity_name: str,
+                   q: ParsedQuery,
                    include_provenance: bool = False,
                    allow_partial: bool = False,
                    partial_aggregate: bool = True,
                    topk_pushdown: bool = True) -> list[dict]:
-    """Rows for one entity's resolution under ``sql``'s pushdown facts.
+    """Rows for one entity's resolution under the parsed query's
+    pushdown facts.
 
     The flag quartet mirrors ``QueryGateway.query``'s signature and
     defaults: the template path only runs with ``partial_aggregate`` or
     ``topk_pushdown`` on and ``include_provenance``/``allow_partial``
     off (advice-caught r14 — the report previously always modeled the
     default configuration)."""
-    from dataweb_spark.plans.pruning import (
-        extract_entity_limit,
-        extract_entity_predicates,
-        extract_referenced_columns,
-        source_can_match,
-    )
+    from dataweb_spark.plans.gateway import pushdown_facts
 
     # mirror gateway.query: when the single-entity query decomposes for
     # the template path, every source processes the FORWARD SQL — the
     # report's pushdown facts come from it, and whole-forwardable flight
     # peers receive it verbatim
     template_sql, agg_spec = None, None
-    if (single_entity and (partial_aggregate or topk_pushdown)
+    if (len(q.entities) == 1 and (partial_aggregate or topk_pushdown)
             and not include_provenance and not allow_partial):
         template_sql, agg_spec = _template_forward(
-            spark, web, relay_name, entity_name, sql,
+            web, relay_name, entity_name, q,
             partial_aggregate, topk_pushdown)
-    eff_sql = template_sql if template_sql is not None else sql
-    conjuncts = extract_entity_predicates(spark, eff_sql, entity_name)
-    limit = extract_entity_limit(spark, eff_sql, entity_name)
-    from dataweb_spark.plans.topk import extract_order_limit
-    entity = web.relay(relay_name).entities.get(entity_name)
-    etypes = ({i.name: i.data_type for i in entity.informations}
-              if entity is not None else None)
-    # row-path order facts mirror gateway gating: single-entity with
-    # topk_pushdown on, else the fact never rides into the readers
-    order_limit = None
-    grouped_fact = None
-    if topk_pushdown and single_entity:
-        order_limit = extract_order_limit(spark, eff_sql, entity_name,
-                                          entity_types=etypes)
-        if order_limit is None:
-            from dataweb_spark.plans.topk import extract_grouped_topk
-            grouped_fact = extract_grouped_topk(spark, eff_sql, entity_name,
-                                                entity_types=etypes)
-    referenced = extract_referenced_columns(spark, eff_sql)
+    if template_sql is not None:
+        q = validate_sql(q.spark, template_sql, single_entity=True)
+    facts = pushdown_facts(q, web.relay(relay_name).entities,
+                           topk=topk_pushdown)
     rows: list[dict] = []
-    _walk(web, relay_name, entity_name, conjuncts, limit, referenced,
-          set(), rows, order_limit, template_sql, grouped_fact, agg_spec)
+    _walk(web, relay_name, entity_name, facts.conjuncts[entity_name],
+          facts.limits.get(entity_name), facts.referenced, set(), rows,
+          facts.order_limits.get(entity_name), template_sql,
+          facts.grouped.get(entity_name), agg_spec)
     return rows
 
 
@@ -286,16 +268,13 @@ def explain_federation(spark: SparkSession, web: Web, relay_name: str,
     so the report models the SAME configuration the caller will execute
     with — e.g. ``include_provenance=True`` disables the template path
     in both places (advice-caught r14)."""
-    from dataweb_spark.plans.validation import validate_sql
-
-    entities = validate_sql(spark, sql)
+    q = validate_sql(spark, sql)
     relay = web.relay(relay_name)
     rows: list[dict] = []
-    for e in sorted(entities):
+    for e in sorted(q.entities):
         if e in relay.entities:
             rows.extend(explain_entity(
-                spark, web, relay_name, e, sql, principal,
-                single_entity=len(entities) == 1,
+                web, relay_name, e, q,
                 include_provenance=include_provenance,
                 allow_partial=allow_partial,
                 partial_aggregate=partial_aggregate,

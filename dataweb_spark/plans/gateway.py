@@ -17,13 +17,14 @@ Reference entry points (SURVEY.md §3):
 from __future__ import annotations
 
 import json
+from dataclasses import dataclass
 from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dataweb_spark.catalog.model import Web
-from dataweb_spark.plans.aggpush import AggQuerySpec
+from dataweb_spark.plans.aggpush import AggQuerySpec, extract_aggregate_query
 from dataweb_spark.plans.pruning import (
     extract_entity_limit,
     extract_entity_predicates,
@@ -40,7 +41,17 @@ from dataweb_spark.plans.resolve import (
     register_entity_views,
     resolve_entity,
 )
-from dataweb_spark.plans.validation import ValidationError, validate_sql
+from dataweb_spark.plans.topk import (
+    GroupedTopKSpec,
+    extract_grouped_topk,
+    extract_order_limit,
+    extract_topk_query,
+)
+from dataweb_spark.plans.validation import (
+    ParsedQuery,
+    ValidationError,
+    validate_sql,
+)
 
 
 def _forwardable_flight_peer(relay, source, entity_name: str):
@@ -94,41 +105,84 @@ def _engine_agg_candidate(relay, source) -> bool:
     return not src_sql or src_sql == "select * from {table}"
 
 
-def _decomposed_template(spark, entity, ename: str, sql: str,
+def _decomposed_template(q: ParsedQuery, entity, ename: str,
                          partial_aggregate: bool = True,
                          topk_pushdown: bool = True):
-    """``(spec, forward_sql, grouped_parsed)`` — the template
-    decomposition ``QueryGateway.query`` fans out per source when the
-    entity has a whole-forwardable flight peer: partial aggregates, then
-    flat top-k, then grouped top-k, in the gateway's exact gating order.
-    Every ``spec`` merges the same way (``spec.merge(union_of_partials)``).
+    """``(spec, forward_sql)`` — the template decomposition
+    ``QueryGateway.query`` fans out per source when the entity has a
+    whole-forwardable flight peer: partial aggregates, then flat top-k,
+    then grouped top-k, in the gateway's exact gating order. Every
+    ``spec`` merges the same way (``spec.merge(union_of_partials)``).
     Shared with ``plans/explain.py`` so the EXPLAIN mirror can never
-    drift from what execution decides. ``grouped_parsed`` tells the
-    caller whether ``extract_grouped_topk`` already ran (and found
-    nothing, or this function would have returned it) — the row-path
-    grouped extraction skips its JVM parse roundtrip in that case."""
+    drift from what execution decides."""
     etypes = {i.name: i.data_type for i in entity.informations}
     if partial_aggregate:
-        from dataweb_spark.plans.aggpush import extract_aggregate_query
         spec = extract_aggregate_query(
-            spark, sql, ename,
+            q, ename,
             entity_columns=set(entity.info_names()),
             entity_types=etypes)
         if spec is not None:
-            return spec, spec.partial_sql(), False
+            return spec, spec.partial_sql()
     if topk_pushdown:
-        from dataweb_spark.plans.topk import (
-            extract_grouped_topk,
-            extract_topk_query,
-        )
-        tspec = extract_topk_query(spark, sql, ename)
-        if tspec is not None:
-            return tspec, tspec.forward_sql, False
-        gspec = extract_grouped_topk(spark, sql, ename,
-                                     entity_types=etypes)
-        return gspec, (gspec.forward_sql if gspec is not None else None), \
-            True
-    return None, None, False
+        spec = (extract_topk_query(q, ename)
+                or extract_grouped_topk(q, ename, entity_types=etypes))
+        if spec is not None:
+            return spec, spec.forward_sql
+    return None, None
+
+
+@dataclass
+class PushdownFacts:
+    """What one parsed query lets each source apply itself.
+
+    Per entity: the ``conjuncts`` (source pruning and filter pushdown)
+    and a transparent ``limits`` entry; for a single-entity query with
+    top-k pushdown on, the ``order_limits`` fact (ORDER BY + LIMIT
+    rendered into engine peer SQL, each engine answering ≤k rows) or,
+    failing that, the ``grouped`` top-k fact (a rank-bounded window
+    wrapper per source, ``readers._forward_grouped``). A LIMIT never
+    extracts under a Sort, so ``limits`` and ``order_limits`` exclude
+    each other. Query-wide: the ``referenced`` columns (None = all) and
+    ``star``, a width-dependent output (top-level ``SELECT *``) that
+    must not be forwarded whole — the peer's entity may carry more
+    columns than this relay's identity window declares."""
+    conjuncts: dict[str, list]
+    limits: dict[str, int]
+    order_limits: dict[str, tuple]
+    grouped: dict[str, GroupedTopKSpec]
+    referenced: set[str] | None
+    star: bool
+
+
+def pushdown_facts(q: ParsedQuery, catalog: dict,
+                   topk: bool = True) -> PushdownFacts:
+    """The one derivation of :class:`PushdownFacts` from a parsed query,
+    shared by the row path, the template path, the top-groups rounds,
+    EXPLAIN and job tasks. ``catalog`` maps entity names to their
+    declarations (``relay.entities``): the top-k facts carry each sort
+    key's declared type."""
+    facts = PushdownFacts(
+        conjuncts={e: extract_entity_predicates(q, e) for e in q.entities},
+        limits={}, order_limits={}, grouped={},
+        referenced=extract_referenced_columns(q),
+        star=output_shape_has_star(q))
+    for e in q.entities:
+        lim = extract_entity_limit(q, e)
+        if lim is not None:
+            facts.limits[e] = lim
+    if topk and len(q.entities) == 1:
+        e = next(iter(q.entities))
+        entity = catalog.get(e)
+        etypes = ({i.name: i.data_type for i in entity.informations}
+                  if entity is not None else None)
+        ol = extract_order_limit(q, e, entity_types=etypes)
+        if ol is not None:
+            facts.order_limits[e] = ol
+        else:
+            g = extract_grouped_topk(q, e, entity_types=etypes)
+            if g is not None:
+                facts.grouped[e] = g
+    return facts
 
 
 class QueryGateway:
@@ -188,7 +242,8 @@ class QueryGateway:
         the partial merge's O(groups); an unprovable exclusion bound
         falls back to that merge, identical answers either way
         (``self.last_topk_groups`` records which path answered)."""
-        entities = validate_sql(self.spark, sql, single_entity=False)
+        q = validate_sql(self.spark, sql, single_entity=False)
+        entities = q.entities
         self.last_topk_groups = False
         known = self.web.relay(self.relay_name).entities
         unknown = {e for e in entities if e not in known}
@@ -196,7 +251,6 @@ class QueryGateway:
             raise ValidationError(
                 f"unknown entity(ies): {sorted(unknown)}; "
                 f"relay {self.relay_name!r} declares {sorted(known)}")
-        gspec_known = False  # did the template branch already parse it?
         if ((partial_aggregate or topk_pushdown)
                 and not include_provenance
                 and not allow_partial and len(entities) == 1):
@@ -211,9 +265,9 @@ class QueryGateway:
             if any(_forwardable_flight_peer(relay, s, ename) is not None
                    or _engine_agg_candidate(relay, s)
                    for s in relay.sources_for_entity(ename)):
-                spec, fwd, gspec_known = _decomposed_template(
-                    self.spark, known[ename], ename, sql,
-                    partial_aggregate, topk_pushdown)
+                spec, fwd = _decomposed_template(
+                    q, known[ename], ename, partial_aggregate,
+                    topk_pushdown)
                 if spec is not None:
                     self.last_failures = []  # template fails loudly
                     aspec = spec if isinstance(spec, AggQuerySpec) else None
@@ -242,57 +296,21 @@ class QueryGateway:
                     return spec.merge(
                         self.query_template_union(fwd, principal,
                                                   agg_spec=aspec))
-        predicates = {
-            e: extract_entity_predicates(self.spark, sql, e)
-            for e in entities
-        }
-        limits = {}
-        for e in entities:
-            lim = extract_entity_limit(self.spark, sql, e)
-            if lim is not None:
-                limits[e] = lim
-        # row-path engine top-k: the ORDER BY + LIMIT fact rides into the
-        # source readers (trino/flightsql/non-identity flight render it
-        # into the peer SQL — each engine answers with ≤k rows) and the
-        # final sql's own sort+limit over the narrowed union is the merge
-        order_limits = {}
-        grouped_limits = {}
-        if topk_pushdown and len(entities) == 1:
-            from dataweb_spark.plans.topk import (
-                extract_grouped_topk,
-                extract_order_limit,
-            )
-            e = next(iter(entities))
-            etypes = {i.name: i.data_type for i in known[e].informations}
-            ol = extract_order_limit(self.spark, sql, e,
-                                     entity_types=etypes)
-            if ol is not None:
-                order_limits[e] = ol
-            else:
-                # row-path GROUPED top-k: trino/flightsql/non-identity
-                # flight sources receive a rank-bounded window wrapper
-                # (readers._forward_grouped) — ≤ bound rows per physical
-                # partition cross the wire; the final sql's own window
-                # over the narrowed union is the merge. The template
-                # branch above may already have parsed the shape (and
-                # found no spec, or it would have returned) — don't pay
-                # the JVM parse roundtrip twice.
-                gl = None if gspec_known else extract_grouped_topk(
-                    self.spark, sql, e, entity_types=etypes)
-                if gl is not None:
-                    grouped_limits[e] = gl
-        referenced = extract_referenced_columns(self.spark, sql)
+        # the row path: the order-limit and grouped top-k facts ride into
+        # the source readers, and the final sql's own sort+limit or
+        # window over the narrowed union is the merge
+        facts = pushdown_facts(q, known, topk=topk_pushdown)
         self.last_failures: list[tuple[str, str, str]] = []
         register_entity_views(self.spark, self.web, self.relay_name, principal,
                               include_provenance=include_provenance,
-                              predicates=predicates,
+                              predicates=facts.conjuncts,
                               allow_partial=allow_partial,
                               failures=self.last_failures,
                               only=set(entities),
-                              limits=limits,
-                              referenced=referenced,
-                              order_limits=order_limits,
-                              grouped_limits=grouped_limits)
+                              limits=facts.limits,
+                              referenced=facts.referenced,
+                              order_limits=facts.order_limits,
+                              grouped_limits=facts.grouped)
         return self.spark.sql(sql)
 
     # -- template mode (raw Flight analog) ------------------------------
@@ -302,31 +320,32 @@ class QueryGateway:
     # server sees one per distinct aggregate query shape)
     _ROUND_FACT_CAP = 64
 
-    def _round_facts(self, sql: str, base: str) -> dict | None:
+    def _round_facts(self, q: ParsedQuery, base: str
+                     ) -> PushdownFacts | None:
         """Pushdown facts for a library-generated aggregate-template
         ROUND (r16, guide §5 — repeated driver work): the multi-round
         top-k-groups protocol re-runs the same partial template with an
         ``ORDER BY … LIMIT`` or ``HAVING`` suffix up to four times, and
-        every round re-paid ~5 JVM parse round-trips deriving facts that
-        cannot differ between rounds — predicates are harvested only
-        from scan-level Filter nodes (a HAVING parses as
+        such a suffix cannot change any fact — predicates are harvested
+        only from scan-level Filter nodes (a HAVING parses as
         UnresolvedHaving ABOVE the Aggregate), the probe/IN-list
         predicates reference only columns the template already
         references, a LIMIT above the round's ORDER BY never extracts
         (Sort is not limit-transparent), the order/grouped top-k facts
-        never fire on an aggregate template, and the template projects
-        explicit columns (no star). Facts are computed ONCE from the
-        bare template and cached per base string.
+        never fire on an aggregate template, and neither suffix changes
+        the output columns. So the facts are derived ONCE from the bare
+        template and cached per base string; the caller still fully
+        validates every round SQL.
 
-        The full ``validate_sql`` still runs on EVERY round SQL (this
-        method's caller) — only the fact extraction is shared. ``None``
-        when ``sql`` is not a recognizable round form of ``base``
+        ``None`` when ``q`` is not a recognizable round form of ``base``
         (suffix other than ORDER BY/HAVING, or one smuggling a subquery
         — a SELECT inside the suffix could reference the entity a
-        second time and void the extractors' multi-reference guard), in
-        which case the caller keeps the generic per-call parse path."""
+        second time and void the extractors' multi-reference guard) or
+        names another entity, in which case the caller derives the
+        round's own facts."""
         import re as _re
 
+        sql = q.sql
         if not sql.startswith(base):
             return None
         suffix = sql[len(base):].strip()
@@ -338,19 +357,15 @@ class QueryGateway:
         cache = self.__dict__.setdefault("_round_fact_cache", {})
         facts = cache.get(base)
         if facts is None:
-            ename = next(iter(validate_sql(self.spark, base,
-                                           single_entity=True)))
-            facts = {
-                "entity": ename,
-                "conjuncts": extract_entity_predicates(self.spark, base,
-                                                       ename),
-                "limit": extract_entity_limit(self.spark, base, ename),
-                "referenced": extract_referenced_columns(self.spark,
-                                                         base),
-            }
+            bq = q if sql == base else validate_sql(
+                self.spark, base, single_entity=True)
+            facts = pushdown_facts(
+                bq, self.web.relay(self.relay_name).entities)
             while len(cache) >= self._ROUND_FACT_CAP:
                 cache.pop(next(iter(cache)))
             cache[base] = facts
+        if facts.conjuncts.keys() != q.entities:
+            return None
         return facts
 
     def query_template(self, sql: str, principal: str | None = None,
@@ -381,75 +396,35 @@ class QueryGateway:
         renderer refuses keeps the generic Spark-side path. The SQL text
         and the structured facts describe the SAME query by construction
         (both derive from the spec)."""
-        entities = validate_sql(self.spark, sql, single_entity=True)
-        entity_name = next(iter(entities))
+        q = validate_sql(self.spark, sql, single_entity=True)
+        entity_name = next(iter(q.entities))
         relay = self.web.relay(self.relay_name)
         if entity_name not in relay.entities:
             raise ValidationError(f"unknown entity {entity_name!r}")
 
-        # r16: aggregate-protocol rounds share one fact extraction per
+        # r16: aggregate-protocol rounds share one fact derivation per
         # template (see _round_facts). ``agg_spec`` marks the local
         # coordinator's own rounds; ``template_base`` is the same hint
-        # arriving over the wire at a peer relay (flight_service).
+        # arriving over the wire at a peer relay (flight_service). The
+        # order/grouped facts fire on forwarded top-k templates too (the
+        # reconstructed `… WHERE __gk0 <= n` matches the grouped shape).
         base = (agg_spec.partial_sql() if agg_spec is not None
                 else template_base)
-        facts = self._round_facts(sql, base) if base else None
-        if facts is not None and facts["entity"] == entity_name:
-            conjuncts = facts["conjuncts"]
-            limit = facts["limit"]
-            referenced = facts["referenced"]
-            order_limit = None
-            grouped_fact = None
-            star_out = False
-            return self._run_template_sources(
-                sql, principal, entity_name, relay, conjuncts, limit,
-                referenced, order_limit, grouped_fact, star_out,
-                agg_spec, agg_round)
-
-        conjuncts = extract_entity_predicates(self.spark, sql, entity_name)
-        limit = extract_entity_limit(self.spark, sql, entity_name)
-        # the federated top-k fact: for a provable ORDER BY … LIMIT k the
-        # row-path engine readers (trino/flightsql/non-identity flight)
-        # render ORDER BY + LIMIT into the peer SQL so each engine answers
-        # with ≤k rows (plans/topk.py:extract_order_limit; the consumer
-        # re-validates per source — identity mappings, complete filters).
-        # extract_entity_limit never fires under a Sort, so `limit` and
-        # the fact are mutually exclusive by construction.
-        # (extract_order_limit self-gates on a LIMIT token, so aggpush
-        # partial templates and plain templates skip the parse roundtrip)
-        from dataweb_spark.plans.topk import (
-            extract_grouped_topk,
-            extract_order_limit,
-        )
-        etypes = {i.name: i.data_type
-                  for i in relay.entities[entity_name].informations}
-        order_limit = extract_order_limit(self.spark, sql, entity_name,
-                                          entity_types=etypes)
-        # the grouped sibling (fires on grouped forward_sql replays too:
-        # the reconstructed `… WHERE __gk0 <= n` matches the shape)
-        grouped_fact = None
-        if order_limit is None:
-            grouped_fact = extract_grouped_topk(self.spark, sql,
-                                                entity_name,
-                                                entity_types=etypes)
-        referenced = extract_referenced_columns(self.spark, sql)
-        # A width-dependent output (top-level SELECT *) must not be
-        # forwarded: the peer's entity may carry more columns than this
-        # relay's identity window declares, changing the result schema.
-        star_out = output_shape_has_star(self.spark, sql)
+        facts = self._round_facts(q, base) if base else None
+        if facts is None:
+            facts = pushdown_facts(q, relay.entities)
         return self._run_template_sources(
-            sql, principal, entity_name, relay, conjuncts, limit,
-            referenced, order_limit, grouped_fact, star_out,
-            agg_spec, agg_round)
+            sql, principal, entity_name, relay, facts, agg_spec, agg_round)
 
     def _run_template_sources(self, sql, principal, entity_name, relay,
-                              conjuncts, limit, referenced, order_limit,
-                              grouped_fact, star_out, agg_spec, agg_round
+                              facts: PushdownFacts, agg_spec, agg_round
                               ) -> list[tuple[str, str, DataFrame]]:
         """The per-source fan-out shared by the generic template path
         and the cached-fact round path (r16): every behavior below —
         forwarding, engine pushdown, replica failover, remote hops — is
         ONE implementation for both."""
+        grouped_fact = facts.grouped.get(entity_name)
+        star_out = facts.star
         etypes = {i.name: i.data_type
                   for i in relay.entities[entity_name].informations}
         results: list[tuple[str, str, DataFrame]] = []
@@ -578,8 +553,9 @@ class QueryGateway:
                       _map_referenced_through(rm, ref),
                       chain + [(r, rm)])
 
-        visit(self.relay_name, entity_name, conjuncts, limit, referenced,
-              [], ol=order_limit)
+        visit(self.relay_name, entity_name, facts.conjuncts[entity_name],
+              facts.limits.get(entity_name), facts.referenced, [],
+              ol=facts.order_limits.get(entity_name))
         return results
 
     def query_template_union(self, sql: str, principal: str | None = None,

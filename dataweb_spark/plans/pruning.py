@@ -11,11 +11,10 @@ per union branch; this module removes the branch from the plan entirely.
 
 Mechanics — all Spark-native, no SQL re-parsing of our own:
 
-* ``extract_entity_predicates`` parses the user SQL with Spark's own parser
-  (``sessionState().sqlParser().parsePlan``) and walks the unresolved logical
-  plan for ``Filter`` nodes whose subtree reads exactly the target entity;
-  their conditions are decomposed into conjuncts of the shape
-  ``<column> <op> <literal>``.
+* ``extract_entity_predicates`` walks the unresolved logical plan that
+  ``validation.validate_sql`` parsed with Spark's own parser for ``Filter``
+  nodes whose subtree reads exactly the target entity; their conditions
+  are decomposed into conjuncts of the shape ``<column> <op> <literal>``.
 * Sources declare optional per-logical-column ``bounds`` (min/max) in the
   catalog (YAML ``bounds: {shipdate: ["1995-01-01", "1995-12-31"]}``).
 * ``source_can_match`` is an interval-satisfiability check: a source is
@@ -33,6 +32,8 @@ import datetime as _dt
 from typing import Any
 
 from pyspark.sql import SparkSession
+
+from dataweb_spark.plans.validation import ParsedQuery
 
 # Conjunct = (column_name, op, python_value); op ∈ {'=','<','<=','>','>='}
 Conjunct = tuple[str, str, Any]
@@ -136,8 +137,7 @@ def _count_entity_refs(jplan, entity: str) -> int:
     return n_refs
 
 
-def extract_entity_predicates(spark: SparkSession, sql: str,
-                              entity: str) -> list[Conjunct]:
+def extract_entity_predicates(q: ParsedQuery, entity: str) -> list[Conjunct]:
     """Conjunctive ``col op literal`` predicates the query applies to
     ``entity``, harvested only from Filter nodes whose child subtree is the
     plain relation (no Aggregate/Project/Window in between) so every
@@ -147,14 +147,10 @@ def extract_entity_predicates(spark: SparkSession, sql: str,
     differently-filtered derived tables), the harvested conjuncts from the
     two branches would be conjoined — unsound for both pruning and peer
     pushdown — so multi-reference queries yield no conjuncts."""
-    try:
-        jplan = spark._jsparkSession.sessionState().sqlParser().parsePlan(sql)
-    except Exception:
-        return []
-    if _count_entity_refs(jplan, entity) != 1:
+    if _count_entity_refs(q.plan, entity) != 1:
         return []
     out: list[Conjunct] = []
-    stack = [jplan]
+    stack = [q.plan]
     while stack:
         node = stack.pop()
         if (node.getClass().getSimpleName() == "Filter"
@@ -175,8 +171,7 @@ _LIMIT_TRANSPARENT = {"Project", "SubqueryAlias", "GlobalLimit", "LocalLimit",
                       "UnresolvedRelation"}
 
 
-def extract_entity_limit(spark: SparkSession, sql: str,
-                         entity: str) -> int | None:
+def extract_entity_limit(q: ParsedQuery, entity: str) -> int | None:
     """The smallest LIMIT the query provably applies directly over
     ``entity`` with nothing but projections in between — safe to replicate
     per federated source (each source returning ≤N rows still leaves the
@@ -188,14 +183,10 @@ def extract_entity_limit(spark: SparkSession, sql: str,
     entity) must not push the one branch's LIMIT into the shared entity
     view — the other branch needs the untruncated rows — so multi-reference
     queries yield no limit."""
-    try:
-        jplan = spark._jsparkSession.sessionState().sqlParser().parsePlan(sql)
-    except Exception:
-        return None
-    if _count_entity_refs(jplan, entity) != 1:
+    if _count_entity_refs(q.plan, entity) != 1:
         return None
     best: int | None = None
-    stack = [jplan]
+    stack = [q.plan]
     while stack:
         node = stack.pop()
         if node.getClass().getSimpleName() == "GlobalLimit":
@@ -245,19 +236,14 @@ def _collect_attrs(jexpr, out: set[str]) -> bool:
     return True
 
 
-def extract_referenced_columns(spark: SparkSession,
-                               sql: str) -> set[str] | None:
+def extract_referenced_columns(q: ParsedQuery) -> set[str] | None:
     """Every identifier token the query references anywhere (column names
     and qualifiers alike, lowercased) — a conservative OVER-approximation of
     the columns read, used to project federated peer scans. ``None`` means
-    "could be anything" (a ``*`` appears somewhere, or parsing failed):
-    callers must then fetch every mapped column."""
-    try:
-        jplan = spark._jsparkSession.sessionState().sqlParser().parsePlan(sql)
-    except Exception:
-        return None
+    "could be anything" (a ``*`` appears somewhere): callers must then
+    fetch every mapped column."""
     out: set[str] = set()
-    stack = [jplan]
+    stack = [q.plan]
     while stack:
         node = stack.pop()
         exprs = node.expressions()
@@ -277,16 +263,12 @@ _OUTPUT_PASSTHROUGH = {"Sort", "GlobalLimit", "LocalLimit", "Offset",
                        "UnresolvedHint", "UnresolvedHaving"}
 
 
-def output_shape_has_star(spark: SparkSession, sql: str) -> bool:
+def output_shape_has_star(q: ParsedQuery) -> bool:
     """True when the query's OUTPUT column set depends on the relation's
     width — a top-level ``SELECT *`` (or ``tbl.*`` / regex projection).
     Stars nested inside functions (``count(*)``) don't widen the output and
-    return False. Conservative: unparseable/unrecognized shapes → True."""
-    try:
-        jplan = spark._jsparkSession.sessionState().sqlParser().parsePlan(sql)
-    except Exception:
-        return True
-    node = jplan
+    return False. Conservative: unrecognized shapes → True."""
+    node = q.plan
     while (node.getClass().getSimpleName() in _OUTPUT_PASSTHROUGH
            and node.children().size() == 1):
         node = node.children().apply(0)

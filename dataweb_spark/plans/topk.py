@@ -11,8 +11,8 @@ pushes LIMIT alone into per-endpoint scans
 through ORDER BY (a bare per-source limit under a sort is wrong); this
 module adds the order-aware form the reference lacks.
 
-Mechanics mirror ``plans/aggpush.py``: the query is parsed with Spark's
-own parser and the accepted shape validated node-by-node —
+Mechanics mirror ``plans/aggpush.py``: the plan ``validate_sql`` parsed
+with Spark's own parser is validated node-by-node —
 ``GlobalLimit(k) → LocalLimit → Sort → {Project/Filter/SubqueryAlias}*
 → entity`` with no aggregates, windows, DISTINCT, subqueries, or stars.
 Sort keys resolvable from the SELECT's own output columns merge
@@ -43,10 +43,11 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dataweb_spark.plans.aggpush import _bare_attr, _cls, _tree_has
+from dataweb_spark.plans.validation import ParsedQuery
 
 # nodes the per-source replay makes row-local: each source running the
 # full query applies them to its own rows only, which composes with the
@@ -173,11 +174,13 @@ def _declared_lookup(entity_types: dict | None):
     return declared
 
 
-def _parse_topk_prefix(spark: SparkSession, sql: str, entity: str):
-    """Shared plan-prefix validation for both extractors: parse ``sql``
-    and return ``(k, offset, sort_node)`` when it opens with the top-k
-    shape ``GlobalLimit(Literal k) → LocalLimit → [Offset(Literal n)] →
-    Sort(global)`` over a single reference to ``entity``, else None.
+def _topk_prefix(q: ParsedQuery, entity: str):
+    """Shared plan-prefix validation for both extractors: return
+    ``(k, offset, sort_node)`` when the plan opens with the top-k shape
+    ``GlobalLimit(Literal k) → LocalLimit → [Offset(Literal n)] →
+    Sort(global)`` over a single reference to ``entity``, else None. The
+    root-shape checks run first: most queries fail them within a node or
+    two, before the whole-tree reference count.
 
     LIMIT k OFFSET n parses with the Offset BELOW the limits; the offset
     is GLOBAL — forwarding it per source would skip n rows at EVERY
@@ -187,13 +190,7 @@ def _parse_topk_prefix(spark: SparkSession, sql: str, entity: str):
     its top-k — only a global ORDER BY makes the merge law hold (r13
     review fix, regression-pinned in the rejection grid)."""
     from dataweb_spark.plans.pruning import _count_entity_refs
-    try:
-        jplan = spark._jsparkSession.sessionState().sqlParser() \
-                     .parsePlan(sql)
-    except Exception:
-        return None
-    if _count_entity_refs(jplan, entity) != 1:
-        return None
+    jplan = q.plan
     if _cls(jplan) != "GlobalLimit":
         return None
     lim = jplan.limitExpr()
@@ -228,14 +225,15 @@ def _parse_topk_prefix(spark: SparkSession, sql: str, entity: str):
             return None
     except Exception:
         return None
+    if _count_entity_refs(jplan, entity) != 1:
+        return None
     return k, offset, node
 
 
-def extract_topk_query(spark: SparkSession, sql: str,
-                       entity: str) -> TopKSpec | None:
-    """Parse ``sql`` and return a :class:`TopKSpec` when it is a
-    provably per-source-replayable top-k over ``entity``, else None."""
-    prefix = _parse_topk_prefix(spark, sql, entity)
+def extract_topk_query(q: ParsedQuery, entity: str) -> TopKSpec | None:
+    """A :class:`TopKSpec` when the query is a provably
+    per-source-replayable top-k over ``entity``, else None."""
+    prefix = _topk_prefix(q, entity)
     if prefix is None:
         return None
     k, offset, sort = prefix
@@ -360,7 +358,7 @@ def extract_topk_query(spark: SparkSession, sql: str,
 
     if not needs_hidden and not offset:
         return TopKSpec(k=k, order=order, output_cols=outputs,
-                        forward_sql=sql)
+                        forward_sql=q.sql)
     if offset and not simple_shape:
         return None  # a global offset always needs reconstruction
 
@@ -386,7 +384,7 @@ def extract_topk_query(spark: SparkSession, sql: str,
             for _, child, direction, nulls in parsed_orders)
         fwd = (f"SELECT {', '.join(items)} FROM {entity}{where} "
                f"ORDER BY {order_by} LIMIT {k + offset}")
-        spark._jsparkSession.sessionState().sqlParser().parsePlan(fwd)
+        q.spark._jsparkSession.sessionState().sqlParser().parsePlan(fwd)
     except Exception:
         return None
     return TopKSpec(k=k, order=order, output_cols=outputs, offset=offset,
@@ -432,7 +430,7 @@ def _filters_fully_decompose(conds) -> bool:
     return True
 
 
-def extract_order_limit(spark: SparkSession, sql: str, entity: str,
+def extract_order_limit(q: ParsedQuery, entity: str,
                         entity_types: dict | None = None
                         ) -> tuple[list[tuple[str, str, str, str | None]],
                                    int] | None:
@@ -464,13 +462,9 @@ def extract_order_limit(spark: SparkSession, sql: str, entity: str,
     case when found — a key the entity doesn't declare carries type None
     and never forwards.
 
-    Cheap-gated: a SQL without a LIMIT token can never match, and this
-    sits on hot planning paths (every template re-extracts) — skip the
-    JVM parsePlan roundtrip entirely (one gate here, not per caller)."""
-    import re as _re
-    if not _re.search(r"\blimit\b", sql, _re.IGNORECASE):
-        return None
-    prefix = _parse_topk_prefix(spark, sql, entity)
+    A plan without a LIMIT root fails the prefix's first check, so this
+    costs one node inspection on most queries."""
+    prefix = _topk_prefix(q, entity)
     if prefix is None:
         return None
     k, offset, sort = prefix
@@ -673,12 +667,11 @@ def _rank_filter_fact(cond) -> tuple[str, str, int] | None:
     return name, ops[eff], v
 
 
-def extract_grouped_topk(spark: SparkSession, sql: str,
-                         entity: str,
+def extract_grouped_topk(q: ParsedQuery, entity: str,
                          entity_types: dict | None = None
                          ) -> GroupedTopKSpec | None:
-    """Parse ``sql`` and return a :class:`GroupedTopKSpec` when it is a
-    provably per-source-replayable top-n-per-group over ``entity``:
+    """A :class:`GroupedTopKSpec` when the query is a provably
+    per-source-replayable top-n-per-group over ``entity``:
 
     ``[GlobalLimit(m) -> LocalLimit ->] [Sort(bare output keys) ->]
     Project(bare outputs) -> Filter(rank_alias <= n) -> [SubqueryAlias]
@@ -695,19 +688,11 @@ def extract_grouped_topk(spark: SparkSession, sql: str,
     column aliasing would silently rebind them in the reconstructed
     query); columns absent from the inner SELECT ship as extra plain
     columns and are dropped after the merge. Anything unprovable returns
-    None — the row path stays correct, just O(rows) on the wire.
+    None — the row path stays correct, just O(rows) on the wire. The
+    root-shape checks run before the whole-tree reference count.
     """
-    import re as _re
-    if not _re.search(r"\bover\b", sql, _re.IGNORECASE):
-        return None
     from dataweb_spark.plans.pruning import _count_entity_refs
-    try:
-        jplan = spark._jsparkSession.sessionState().sqlParser() \
-                     .parsePlan(sql)
-    except Exception:
-        return None
-    if _count_entity_refs(jplan, entity) != 1:
-        return None
+    jplan = q.plan
 
     # optional presentational GlobalLimit(m) -> LocalLimit prefix
     final_limit: int | None = None
@@ -847,6 +832,8 @@ def extract_grouped_topk(spark: SparkSession, sql: str,
         except Exception:
             return None
     if rank_item is None:
+        return None
+    if _count_entity_refs(q.plan, entity) != 1:
         return None
     if len({n.lower() for n in inner_names}) != len(inner_names):
         return None
@@ -1009,7 +996,7 @@ def extract_grouped_topk(spark: SparkSession, sql: str,
         quoted = ", ".join("`" + c.replace("`", "``") + "`" for c in keep)
         fwd = (f"SELECT {quoted} FROM ({inner_sql}) "
                f"WHERE `{gk}` <= {bound}")
-        spark._jsparkSession.sessionState().sqlParser().parsePlan(fwd)
+        q.spark._jsparkSession.sessionState().sqlParser().parsePlan(fwd)
     except Exception:
         return None
     return GroupedTopKSpec(op=op, value=value, bound=bound, fn=fn,

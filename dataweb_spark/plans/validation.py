@@ -15,11 +15,19 @@ We use Spark's own parser (``sessionState().sqlParser().parsePlan``) for
 syntax + statement-type detection, so the accepted surface is exactly the
 Spark SQL grammar — a strict superset of the reference's whitelist (§2.3 of
 SURVEY.md maps every whitelisted construct to a native Spark one).
+
+This is the one place an entity query is parsed: :func:`validate_sql`
+returns a :class:`ParsedQuery`, and every pushdown extractor
+(``pruning``, ``topk``, ``aggpush``) walks its plan instead of parsing
+the text again — the reference's one ``Statement`` per query
+(``core/src/execute/utils.rs:26-37``).
 """
 
 from __future__ import annotations
 
 import re
+from dataclasses import dataclass
+from typing import Any
 
 from pyspark.sql import SparkSession
 
@@ -40,6 +48,17 @@ class ValidationError(ValueError):
     pass
 
 
+@dataclass(frozen=True)
+class ParsedQuery:
+    """One validated query: its text, its unresolved Catalyst plan (a
+    py4j handle) and the entities it references. It lives as long as the
+    request that parsed it — callers keep derived facts, never this."""
+    spark: SparkSession
+    sql: str
+    plan: Any
+    entities: frozenset[str]
+
+
 def _parse_plan(spark: SparkSession, sql: str):
     """Parse without executing, via the session's SQL parser."""
     try:
@@ -48,20 +67,20 @@ def _parse_plan(spark: SparkSession, sql: str):
         raise ValidationError(f"SQL parse error: {e}") from e
 
 
-def referenced_entities(spark: SparkSession, sql: str) -> set[str]:
-    """Distinct table names referenced by the query, minus CTE-defined names."""
-    plan = _parse_plan(spark, sql)
+def _referenced_entities(plan) -> frozenset[str]:
+    """Distinct table names referenced by the plan, minus CTE-defined names."""
     text = plan.toString()
     ctes = set()
     for m in _CTE_RE.finditer(text):
         ctes.update(x.strip() for x in m.group(1).split(","))
     rels = {m.group(1).split(",")[0].strip() for m in _RELATION_RE.finditer(text)}
-    return {r for r in rels if r not in ctes}
+    return frozenset(r for r in rels if r not in ctes)
 
 
 def validate_sql(spark: SparkSession, sql: str,
-                 single_entity: bool = False) -> set[str]:
-    """Validate a user query; returns the set of referenced entities.
+                 single_entity: bool = False) -> ParsedQuery:
+    """Validate a user query and return it parsed; ``.entities`` is the
+    set of referenced entities.
 
     Raises :class:`ValidationError` on violation — error strings mirror the
     reference's messages so the integration tests can assert on them
@@ -82,7 +101,7 @@ def validate_sql(spark: SparkSession, sql: str,
             "MergeIntoTable", "CompoundBody"):
         raise ValidationError("only read-only SELECT statements are accepted")
 
-    entities = referenced_entities(spark, sql)
+    entities = _referenced_entities(plan)
     if single_entity and len(entities) != 1:
         raise ValidationError("There must be exactly one entity per query.")
-    return entities
+    return ParsedQuery(spark, sql, plan, entities)

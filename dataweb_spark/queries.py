@@ -43,6 +43,19 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
+def _scratch_dir(prefix: str) -> str:
+    """A new temporary directory for a declared query's index, checkpoint
+    or staged corpus, removed when the interpreter exits. Not earlier: the
+    DataFrame a query returns reads these files lazily."""
+    import atexit
+    import shutil
+    import tempfile
+
+    d = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    return d
+
+
 def register_views(spark: SparkSession, sf_dir: str,
                    force: bool = False) -> None:
     """Bind the 10 canonical table views for ``sf_dir`` on ``spark``.
@@ -3587,13 +3600,11 @@ def _index_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fixed seed) plus novel digit-token docs (→ ``unique``). Verdict
     semantics are property-tested equal to ``dedup_against_corpus``
     (tests/test_dedup_index.py); this query makes them oracle-checked."""
-    import tempfile
-
     from dataweb_spark.functions import dedup_index as DI
     register_views(spark, sf_dir)
     docs = spark.table("documents")
     corpus = docs.where("doc_id % 5 != 0")
-    idx = tempfile.mkdtemp(prefix="dw_idx_classify_")
+    idx = _scratch_dir("dw_idx_classify_")
     DI.build_dedup_index(corpus, idx)
     exact_new = (corpus.where("doc_id % 20 = 1")
                  .select((F.col("doc_id") + 100000).alias("doc_id"), "text"))
@@ -3633,14 +3644,12 @@ def _index_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``exact`` verdict against an appended doc proves the appended fp rows
     serve lookups, a ``near`` verdict against one proves the appended band
     rows do."""
-    import tempfile
-
     from dataweb_spark.functions import dedup_index as DI
     register_views(spark, sf_dir)
     docs = spark.table("documents")
     base = docs.where("doc_id % 5 != 0 and doc_id % 2 = 0")
     delta = docs.where("doc_id % 5 != 0 and doc_id % 2 = 1")
-    idx = tempfile.mkdtemp(prefix="dw_idx_incr_")
+    idx = _scratch_dir("dw_idx_incr_")
     DI.build_dedup_index(base, idx)
     DI.append_batch(delta, idx)
     corpus = base.unionByName(delta)
@@ -3684,16 +3693,14 @@ def _index_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     (same 50 digit tokens + 3-token tail, Jaccard 48/51 ≈ 0.94) is dropped
     by the pair-greedy near collapse. The oracle derives the final corpus
     analytically: the seed ∪ the novel docs, nothing else."""
-    import tempfile
-
     from dataweb_spark.functions import dedup_index as DI
     register_views(spark, sf_dir)
     docs = spark.table("documents").select("doc_id", "text")
     corpus0 = docs.where("doc_id % 5 != 0")
-    idx = tempfile.mkdtemp(prefix="dw_idx_gate_")
-    corpus_dir = tempfile.mkdtemp(prefix="dw_idx_gate_c_") + "/corpus"
-    in_dir = tempfile.mkdtemp(prefix="dw_idx_gate_in_")
-    cp = tempfile.mkdtemp(prefix="dw_idx_gate_cp_")
+    idx = _scratch_dir("dw_idx_gate_")
+    corpus_dir = _scratch_dir("dw_idx_gate_c_") + "/corpus"
+    in_dir = _scratch_dir("dw_idx_gate_in_")
+    cp = _scratch_dir("dw_idx_gate_cp_")
     DI.build_dedup_index(corpus0, idx)
     corpus0.write.parquet(corpus_dir)
 
@@ -4875,8 +4882,6 @@ def _streaming_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark (max_ts - 2h); the oracle reproduces both horizon filters
     (tumbling: hour bucket; sliding: each event belongs to the two
     30-min-aligned windows covering it)."""
-    import tempfile
-
     from dataweb_spark.streaming import events as E
     # ONE shared state pipeline for both shapes (r15 optimization): a
     # 1h tumbling window IS the :00-start subset of the 1h/30min
@@ -4899,7 +4904,7 @@ def _streaming_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
                       F.col("window.end").alias("win_end"),
                       "event_type", "n", "total_value"))
     out = E.run_available_now(
-        merged, tempfile.mkdtemp(prefix="dw_cp_slide_"))
+        merged, _scratch_dir("dw_cp_slide_"))
     t = (out.where(F.minute("win_start") == 0)
             .select(F.lit("tumbling_1h").alias("kind"),
                     "win_start", "win_end", "event_type", "n",
@@ -4946,12 +4951,10 @@ def _streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     record twice) must come out exactly once through
     ``dropDuplicatesWithinWatermark`` — per-event-type counts equal the
     batch distinct counts."""
-    import tempfile
-
     from dataweb_spark.streaming import events as E
     doubled = E.read_event_stream(spark, sf_dir).union(
         E.read_event_stream(spark, sf_dir))
-    cp = tempfile.mkdtemp(prefix="dw_cp_dedup_")
+    cp = _scratch_dir("dw_cp_dedup_")
     # dropDuplicatesWithinWatermark emits every row in the data batch it
     # arrives in — the no-data finalize batch only evicts state, so a
     # finite drain skips it (~40% of the drain; run_available_now doc).
@@ -4984,12 +4987,10 @@ def _streaming_media_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup state with ``dropDuplicatesWithinWatermark`` on an event-time
     column, as ``streaming_dedup_ingest`` does; the unbounded form keeps
     this query's oracle deterministic.)"""
-    import tempfile
-
     from dataweb_spark.functions import multimodal as M
     from dataweb_spark.streaming.events import run_available_now
 
-    work = tempfile.mkdtemp(prefix="dw_media_stream_")
+    work = _scratch_dir("dw_media_stream_")
     media_dir = f"{work}/media"
     media = M.synthesize_cross_container_media(spark, n=16)
     media.write.parquet(media_dir)
@@ -5015,13 +5016,11 @@ order by clip
 def _streaming_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """applyInPandasWithState running totals; final row per user must equal
     the batch groupBy."""
-    import tempfile
-
     from pyspark.sql import Window
 
     from dataweb_spark.streaming import events as E
     stream = E.read_event_stream(spark, sf_dir)
-    cp = tempfile.mkdtemp(prefix="dw_cp_state_")
+    cp = _scratch_dir("dw_cp_state_")
     out = E.run_available_now(E.stateful_user_totals(stream), cp,
                               output_mode="update")
     w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
@@ -5046,11 +5045,9 @@ order by user_id
 def _streaming_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked stream-stream join (purchase ↔ clicks ≤30 min prior,
     same user), drained with availableNow — equals the batch theta join."""
-    import tempfile
-
     from dataweb_spark.streaming import events as E
     stream = E.read_event_stream(spark, sf_dir)
-    cp = tempfile.mkdtemp(prefix="dw_cp_attr_")
+    cp = _scratch_dir("dw_cp_attr_")
     out = E.run_available_now(
         E.attribution_join(stream.where("user_id < 25"),
                            window_minutes=240, watermark="5 hours"), cp)
@@ -5077,15 +5074,13 @@ def _streaming_fed_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregated — so the oracle is the same mapped-union SQL as
     fed_lineitem_q1. Proves the governance layer composes with
     Structured Streaming, which the batch-only reference cannot do."""
-    import tempfile
-
     from dataweb_spark.demo import build_demo_web
     from dataweb_spark.streaming.events import run_available_now
     from dataweb_spark.streaming.federation import stream_entity_view
 
     web = build_demo_web(sf_dir)
     sdf = stream_entity_view(spark, web, "na_us", "lineitem")
-    cp = tempfile.mkdtemp(prefix="dw_cp_fed_ingest_")
+    cp = _scratch_dir("dw_cp_fed_ingest_")
     out = run_available_now(sdf, cp)
     return (out.groupBy("returnflag")
                .agg(F.count("*").alias("n"),
@@ -5819,7 +5814,6 @@ def _media_index_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     1016-1023 are novel rasters (→ novel, NULL match). The oracle states
     the 24 verdicts in closed form."""
     import hashlib
-    import tempfile
 
     import numpy as np
     import pandas as pd
@@ -5853,7 +5847,7 @@ def _media_index_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
                                               "content", "meta"])
 
     corpus = M._synth_range(spark, 24).mapInPandas(corpus_gen, schema=M.MEDIA_SCHEMA)
-    idx = tempfile.mkdtemp(prefix="dw_media_idx_")
+    idx = _scratch_dir("dw_media_idx_")
     MI.build_media_index(corpus, idx)
 
     def batch_gen(batches):
@@ -6778,13 +6772,11 @@ def _warc_directory_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     the file names; every aggregate derives from the source rows so the
     oracle states the result in closed form — all counters integer-exact.
     """
-    import tempfile
-
     from dataweb_spark.sources import warc as W
     register_views(spark, sf_dir)
     blobs = W.synthesize_warc_blobs(spark.table("documents"),
                                     docs_per_blob=10, compress=True)
-    d = tempfile.mkdtemp(prefix="dw_warc_dir_")
+    d = _scratch_dir("dw_warc_dir_")
     W.write_warc_directory(blobs, d)
     recs = W.parse_warc_records(W.read_warc_directory(spark, d))
     return (recs.withColumn("source", F.split("target_uri", "/").getItem(3))
@@ -6933,7 +6925,6 @@ def _media_index_video_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     near_dup); both escaped as novel under the index-aligned r8 tier.
     The oracle states the 18 verdicts in closed form."""
     import hashlib
-    import tempfile
 
     import numpy as np
     import pandas as pd
@@ -6964,7 +6955,7 @@ def _media_index_video_near(spark: SparkSession, sf_dir: str) -> DataFrame:
                                               "content", "meta"])
 
     corpus = M._synth_range(spark, 8).mapInPandas(corpus_gen, schema=M.MEDIA_SCHEMA)
-    idx = tempfile.mkdtemp(prefix="dw_media_vnear_")
+    idx = _scratch_dir("dw_media_vnear_")
     MI.build_media_index(corpus, idx)
 
     def batch_gen(batches):
@@ -7796,8 +7787,6 @@ def _streaming_crawl_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     synthesized so ~half of batch 2 duplicates batch 1 cross-batch
     (doc_id mod 251 collapses opposite-parity pairs). The oracle
     replays both admission rounds as chained SQL stages."""
-    import tempfile
-
     from dataweb_spark.functions import urls as U
     register_views(spark, sf_dir)
     synth = spark.sql("""
@@ -7805,7 +7794,7 @@ def _streaming_crawl_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
                'http://s' || ((doc_id % 251) % 23) || '.com/p/'
                  || (doc_id % 251) as url
         from documents""")
-    root = tempfile.mkdtemp(prefix="dw_crawl_gate_")
+    root = _scratch_dir("dw_crawl_gate_")
     drop, state, cp = f"{root}/drop", f"{root}/state", f"{root}/cp"
     for parity in (0, 1):
         (synth.where(F.col("doc_id") % 2 == parity)
@@ -7886,8 +7875,6 @@ def _media_index_audio_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     of clip 1 (two alien windows ahead: 20/22 at offset -2 →
     near_dup); both escaped as novel under the index-aligned r8 tier.
     The oracle states the 14 verdicts in closed form."""
-    import tempfile
-
     import numpy as np
     import pandas as pd
 
@@ -7921,7 +7908,7 @@ def _media_index_audio_near(spark: SparkSession, sf_dir: str) -> DataFrame:
                                               "content", "meta"])
 
     corpus = M._synth_range(spark, 6).mapInPandas(corpus_gen, schema=M.MEDIA_SCHEMA)
-    idx = tempfile.mkdtemp(prefix="dw_media_anear_")
+    idx = _scratch_dir("dw_media_anear_")
     MI.build_media_index(corpus, idx)
 
     def batch_gen(batches):
@@ -7994,7 +7981,6 @@ def _media_index_rate_normalized(spark: SparkSession,
     (19/20 → near_dup), and a novel 16 kHz clip. The oracle states the
     8 verdicts in closed form."""
     import hashlib
-    import tempfile
 
     import numpy as np
     import pandas as pd
@@ -8043,7 +8029,7 @@ def _media_index_rate_normalized(spark: SparkSession,
                                               "content", "meta"])
 
     corpus = M._synth_range(spark, 7).mapInPandas(corpus_gen, schema=M.MEDIA_SCHEMA)
-    idx = tempfile.mkdtemp(prefix="dw_media_rate_")
+    idx = _scratch_dir("dw_media_rate_")
     MI.build_media_index(corpus, idx)
 
     def batch_gen(batches):
@@ -8975,13 +8961,11 @@ def _embedding_index_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     luck). Completes the persisted-index trio as driver-provable surface
     (text ``dedup_index_classify`` r9, media ``media_index_classify``
     r10, embeddings here)."""
-    import tempfile
-
     from dataweb_spark.functions import embedding_index as EI
     register_views(spark, sf_dir)
     emb = spark.table("embeddings").select("vec_id", "embedding")
     corpus = emb.where("vec_id % 5 != 0")
-    idx = tempfile.mkdtemp(prefix="dw_emb_idx_classify_")
+    idx = _scratch_dir("dw_emb_idx_classify_")
     EI.build_embedding_index(corpus, idx, id_col="vec_id",
                              vec_col="embedding", dim=64)
     copies = corpus.where("vec_id % 20 = 1").select(

@@ -21,6 +21,7 @@ from dataweb_spark.catalog.model import (
     Web,
 )
 from dataweb_spark.plans.gateway import QueryGateway
+from dataweb_spark.plans.validation import validate_sql
 from dataweb_spark.sources.dialects import (
     DUCKDB,
     SPARK,
@@ -781,8 +782,10 @@ def test_extract_order_limit_shapes(spark):
     from dataweb_spark.plans.topk import extract_order_limit
     # bare columns, alias of a bare column, ordinal — all resolve
     ol = extract_order_limit(
-        spark, "select quantity as q, orderkey from items "
-               "where quantity < 9 order by q desc, 2, returnflag limit 4",
+        validate_sql(
+            spark, "select quantity as q, orderkey from items "
+                   "where quantity < 9 "
+                   "order by q desc, 2, returnflag limit 4"),
         "items",
         entity_types={"Quantity": "double", "orderkey": "bigint"})
     assert ol is not None
@@ -797,12 +800,15 @@ def test_extract_order_limit_shapes(spark):
     # pushed conjuncts would under-filter and the per-source top-k would
     # under-fetch
     assert extract_order_limit(
-        spark, "select quantity from items where quantity < 9 "
-               "or orderkey = 1 order by quantity limit 4", "items") is None
+        validate_sql(
+            spark, "select quantity from items where quantity < 9 "
+                   "or orderkey = 1 order by quantity limit 4"),
+        "items") is None
     # alias of an EXPRESSION can't be pushed as a base column
     assert extract_order_limit(
-        spark, "select quantity * 2 as q from items "
-               "order by q limit 4", "items") is None
+        validate_sql(
+            spark, "select quantity * 2 as q from items "
+                   "order by q limit 4"), "items") is None
 
 
 def test_engine_topk_order_limit_reaches_duckdb(spark, sf_dir, engine,
@@ -1336,7 +1342,7 @@ def test_engine_agg_timestamp_group_key_refuses_having(spark, engine):
     from dataweb_spark.plans.aggpush import extract_aggregate_query
     types = {"ts": "timestamp", "v": "double"}
     spec = extract_aggregate_query(
-        spark, "select ts, sum(v) as s from e group by ts",
+        validate_sql(spark, "select ts, sum(v) as s from e group by ts"),
         "e", entity_columns=set(types), entity_types=types)
     assert spec is not None
     src = DataSource(

@@ -22,6 +22,7 @@ from dataweb_spark.catalog.model import (
     Web,
 )
 from dataweb_spark.plans.gateway import QueryGateway
+from dataweb_spark.plans.validation import validate_sql
 from dataweb_spark.sources.readers import _peer_sql
 
 
@@ -406,9 +407,10 @@ def test_template_star_query_not_forwarded_but_correct(
 def test_count_distinct_spec_refines_partial_grain(spark):
     from dataweb_spark.plans.aggpush import extract_aggregate_query
     spec = extract_aggregate_query(
-        spark,
-        "select returnflag, count(distinct orderkey) as d, count(*) as n, "
-        "sum(quantity) as q from lineitem group by returnflag",
+        validate_sql(
+            spark,
+            "select returnflag, count(distinct orderkey) as d, count(*) as n, "
+            "sum(quantity) as q from lineitem group by returnflag"),
         "lineitem")
     assert spec is not None
     psql = spec.partial_sql()
@@ -419,24 +421,27 @@ def test_count_distinct_spec_refines_partial_grain(spark):
     assert "count(1) AS __p2" in psql and "sum(quantity) AS __p3" in psql
     # the distinct column joins the grain ONCE even when repeated/grouped
     spec2 = extract_aggregate_query(
-        spark,
-        "select returnflag, count(distinct returnflag) as a, "
-        "count(distinct orderkey) as b, count(distinct orderkey) as c "
-        "from lineitem group by returnflag",
+        validate_sql(
+            spark,
+            "select returnflag, count(distinct returnflag) as a, "
+            "count(distinct orderkey) as b, count(distinct orderkey) as c "
+            "from lineitem group by returnflag"),
         "lineitem")
     assert spec2.partial_sql().count("GROUP BY returnflag, orderkey") == 1
     # sum/avg DISTINCT refine the grain too; min/max DISTINCT ≡ min/max
     spec3 = extract_aggregate_query(
-        spark,
-        "select sum(distinct quantity) as s, avg(distinct quantity) as a, "
-        "min(distinct quantity) as lo from lineitem",
+        validate_sql(
+            spark,
+            "select sum(distinct quantity) as s, avg(distinct quantity) as a, "
+            "min(distinct quantity) as lo from lineitem"),
         "lineitem")
     psql3 = spec3.partial_sql()
     assert "GROUP BY quantity" in psql3
     assert "min(quantity) AS __p2" in psql3  # plain partial, no pair ship
     # DISTINCT over an expression keeps the row path
     assert extract_aggregate_query(
-        spark, "select count(distinct orderkey + 1) as d from lineitem",
+        validate_sql(spark, "select count(distinct orderkey + 1) as d "
+                            "from lineitem"),
         "lineitem") is None
 
 
@@ -499,24 +504,27 @@ def test_having_spec_rewrites_to_merge_columns(spark):
     from dataweb_spark.plans.aggpush import extract_aggregate_query
     # agg call matching an output -> substituted by the output name
     spec = extract_aggregate_query(
-        spark,
-        "select returnflag, count(*) as n from lineitem "
-        "group by returnflag having count(*) > 5",
+        validate_sql(
+            spark,
+            "select returnflag, count(*) as n from lineitem "
+            "group by returnflag having count(*) > 5"),
         "lineitem")
     assert spec is not None and spec.having_sql == "(n > 5)"
     assert spec.hidden == []
     # alias reference works directly
     spec2 = extract_aggregate_query(
-        spark,
-        "select returnflag, count(*) as n from lineitem "
-        "group by returnflag having n > 5 and returnflag <> 'A'",
+        validate_sql(
+            spark,
+            "select returnflag, count(*) as n from lineitem "
+            "group by returnflag having n > 5 and returnflag <> 'A'"),
         "lineitem")
     assert spec2 is not None and "n > 5" in spec2.having_sql
     # an aggregate NOT in the projection becomes a hidden merge output
     spec3 = extract_aggregate_query(
-        spark,
-        "select returnflag, count(*) as n from lineitem "
-        "group by returnflag having sum(quantity) > 100",
+        validate_sql(
+            spark,
+            "select returnflag, count(*) as n from lineitem "
+            "group by returnflag having sum(quantity) > 100"),
         "lineitem")
     assert spec3 is not None and spec3.hidden == [
         ("agg", "sum", "quantity", "__h0", None)]
@@ -524,22 +532,25 @@ def test_having_spec_rewrites_to_merge_columns(spark):
     assert "sum(quantity) AS __p2" in spec3.partial_sql()
     # unknown (possibly aggregate) function -> row path
     assert extract_aggregate_query(
-        spark,
-        "select returnflag, count(*) as n from lineitem "
-        "group by returnflag having stddev(quantity) > 1",
+        validate_sql(
+            spark,
+            "select returnflag, count(*) as n from lineitem "
+            "group by returnflag having stddev(quantity) > 1"),
         "lineitem") is None
     # a string literal containing the substitution key -> row path
     assert extract_aggregate_query(
-        spark,
-        "select returnflag, count(*) as n from lineitem "
-        "group by returnflag having count(*) > 5 "
-        "and returnflag <> 'count(1)'",
+        validate_sql(
+            spark,
+            "select returnflag, count(*) as n from lineitem "
+            "group by returnflag having count(*) > 5 "
+            "and returnflag <> 'count(1)'"),
         "lineitem") is None
     # aggregate alias shadowing an entity column is ambiguous -> row path
     assert extract_aggregate_query(
-        spark,
-        "select returnflag, sum(tax_amount) as quantity from lineitem "
-        "group by returnflag having quantity > 5",
+        validate_sql(
+            spark,
+            "select returnflag, sum(tax_amount) as quantity from lineitem "
+            "group by returnflag having quantity > 5"),
         "lineitem", entity_columns={"returnflag", "quantity"}) is None
 
 
@@ -583,29 +594,33 @@ def test_having_guards_review_fixes(spark, demo_web, peer_server,
     from dataweb_spark.plans.aggpush import extract_aggregate_query
     # differently-cased aggregate alias shadowing an entity column
     assert extract_aggregate_query(
-        spark,
-        "select returnflag, sum(tax_amount) as QUANTITY from lineitem "
-        "group by returnflag having QUANTITY > 5",
+        validate_sql(
+            spark,
+            "select returnflag, sum(tax_amount) as QUANTITY from lineitem "
+            "group by returnflag having QUANTITY > 5"),
         "lineitem", entity_columns={"returnflag", "quantity"}) is None
     # group alias shadowing a DIFFERENT entity column
     assert extract_aggregate_query(
-        spark,
-        "select returnflag as linestatus, count(*) as n from lineitem "
-        "group by returnflag having linestatus <> 'O'",
+        validate_sql(
+            spark,
+            "select returnflag as linestatus, count(*) as n from lineitem "
+            "group by returnflag having linestatus <> 'O'"),
         "lineitem",
         entity_columns={"returnflag", "linestatus"}) is None
     # unrenamed group column sharing its own entity name stays accepted
     spec = extract_aggregate_query(
-        spark,
-        "select returnflag, count(*) as n from lineitem "
-        "group by returnflag having returnflag <> 'A'",
+        validate_sql(
+            spark,
+            "select returnflag, count(*) as n from lineitem "
+            "group by returnflag having returnflag <> 'A'"),
         "lineitem", entity_columns={"returnflag", "quantity"})
     assert spec is not None
     # a user alias named __h0 no longer collides with the hidden output
     spec2 = extract_aggregate_query(
-        spark,
-        "select returnflag, sum(quantity) as __h0 from lineitem "
-        "group by returnflag having count(*) > 5",
+        validate_sql(
+            spark,
+            "select returnflag, sum(quantity) as __h0 from lineitem "
+            "group by returnflag having count(*) > 5"),
         "lineitem")
     assert spec2 is not None and spec2.hidden == [
         ("agg", "count", None, "__h1", None)]
@@ -638,25 +653,28 @@ def test_order_by_aggregate_expression(spark, demo_web, peer_server,
     from dataweb_spark.plans.aggpush import extract_aggregate_query
     # binds to the existing output
     spec = extract_aggregate_query(
-        spark,
-        "select returnflag, count(*) as n from lineitem "
-        "group by returnflag order by count(*) desc",
+        validate_sql(
+            spark,
+            "select returnflag, count(*) as n from lineitem "
+            "group by returnflag order by count(*) desc"),
         "lineitem")
     assert spec is not None and spec.order_by == [("n", False)]
     assert spec.hidden == []
     # needs a hidden merge column (shared with HAVING's, not duplicated)
     spec2 = extract_aggregate_query(
-        spark,
-        "select returnflag from lineitem group by returnflag "
-        "having sum(quantity) > 0 order by sum(quantity) desc",
+        validate_sql(
+            spark,
+            "select returnflag from lineitem group by returnflag "
+            "having sum(quantity) > 0 order by sum(quantity) desc"),
         "lineitem")
     assert spec2 is not None and len(spec2.hidden) == 1
     assert spec2.order_by == [(spec2.hidden[0][3], False)]
     # non-aggregate ORDER BY expression still keeps the row path
     assert extract_aggregate_query(
-        spark,
-        "select returnflag, count(*) as n from lineitem "
-        "group by returnflag order by n + 1",
+        validate_sql(
+            spark,
+            "select returnflag, count(*) as n from lineitem "
+            "group by returnflag order by n + 1"),
         "lineitem") is None
     grid = [
         # returnflag tie-breaker: rows tied on n may legally reorder
@@ -719,7 +737,7 @@ def test_partial_aggregate_differential_grid(spark, demo_web, peer_server,
                     if g:
                         sql += f" order by {g}"
                     assert extract_aggregate_query(
-                        spark, sql, "lineitem") is not None, sql
+                        validate_sql(spark, sql), "lineitem") is not None, sql
                     fast = edge_gateway.query(sql).collect()
                     slow = edge_gateway.query(
                         sql, partial_aggregate=False).collect()
@@ -740,7 +758,7 @@ def test_unprojected_group_key_does_not_collapse(spark, demo_web,
     grouped only on projected keys and collapsed all groups to ONE row."""
     from dataweb_spark.plans.aggpush import extract_aggregate_query
     sql = "select count(*) as n from lineitem group by returnflag"
-    spec = extract_aggregate_query(spark, sql, "lineitem")
+    spec = extract_aggregate_query(validate_sql(spark, sql), "lineitem")
     assert spec is not None and spec.extra_groups == [("returnflag",
                                                        "__g0")]
     assert "returnflag AS __g0" in spec.partial_sql()
@@ -764,9 +782,10 @@ def test_group_by_expression_decomposes(spark, demo_web, peer_server,
     expression; ordinals and unknown functions keep the row path."""
     from dataweb_spark.plans.aggpush import extract_aggregate_query
     spec = extract_aggregate_query(
-        spark,
-        "select year(shipdate) as y, count(*) as n from lineitem "
-        "group by year(shipdate)",
+        validate_sql(
+            spark,
+            "select year(shipdate) as y, count(*) as n from lineitem "
+            "group by year(shipdate)"),
         "lineitem")
     assert spec is not None
     psql = spec.partial_sql()
@@ -774,12 +793,14 @@ def test_group_by_expression_decomposes(spark, demo_web, peer_server,
     assert "GROUP BY year(shipdate)" in psql
     # ordinal GROUP BY: position shifts in the reshaped partial — reject
     assert extract_aggregate_query(
-        spark, "select returnflag, count(*) as n from lineitem group by 1",
+        validate_sql(spark, "select returnflag, count(*) as n "
+                            "from lineitem group by 1"),
         "lineitem") is None
     # unknown function in the grouping expression — reject
     assert extract_aggregate_query(
-        spark,
-        "select count(*) as n from lineitem group by rand()",
+        validate_sql(
+            spark,
+            "select count(*) as n from lineitem group by rand()"),
         "lineitem") is None
     grid = [
         "select year(shipdate) as y, count(*) as n, sum(quantity) as s "
@@ -811,9 +832,10 @@ def test_expression_outputs_over_aggregates(spark, demo_web, peer_server,
     expression — identical answers to the row path."""
     from dataweb_spark.plans.aggpush import extract_aggregate_query
     spec = extract_aggregate_query(
-        spark,
-        "select returnflag, sum(extendedprice) / sum(quantity) as unit, "
-        "count(*) as n from lineitem group by returnflag",
+        validate_sql(
+            spark,
+            "select returnflag, sum(extendedprice) / sum(quantity) as unit, "
+            "count(*) as n from lineitem group by returnflag"),
         "lineitem")
     assert spec is not None
     kinds = [o[0] for o in spec.outputs]
@@ -822,14 +844,16 @@ def test_expression_outputs_over_aggregates(spark, demo_web, peer_server,
     # a bare column inside the expression must be a group key projected
     # under its own name — otherwise row path
     assert extract_aggregate_query(
-        spark,
-        "select returnflag as rf, concat(returnflag, count(*)) as x "
-        "from lineitem group by returnflag",
+        validate_sql(
+            spark,
+            "select returnflag as rf, concat(returnflag, count(*)) as x "
+            "from lineitem group by returnflag"),
         "lineitem") is None
     # no aggregate anywhere -> per-row projection, not an aggregate query
     assert extract_aggregate_query(
-        spark,
-        "select quantity + 1 as q from lineitem",
+        validate_sql(
+            spark,
+            "select quantity + 1 as q from lineitem"),
         "lineitem") is None
     grid = [
         "select returnflag, round(sum(extendedprice) / sum(quantity), 4) "
@@ -868,17 +892,19 @@ def test_rewrite_review_fixes_r12b(spark, demo_web, peer_server,
     # (1) an agg sql as a SUFFIX of a longer function name must not be
     # mangled: try_sum is unknown -> row path, never a silent rewrite
     assert extract_aggregate_query(
-        spark,
-        "select sum(quantity) as n, count(*) as try_n from lineitem "
-        "group by returnflag having try_sum(quantity) < 0",
+        validate_sql(
+            spark,
+            "select sum(quantity) as n, count(*) as try_n from lineitem "
+            "group by returnflag having try_sum(quantity) < 0"),
         "lineitem") is None
     # (2) user aliases in the synthetic __p partial namespace would
     # duplicate partial columns and error the merge -> row path
     for alias in ("__p1", "__p0_d"):
         assert extract_aggregate_query(
-            spark,
-            f"select returnflag as {alias}, count(*) as n from lineitem "
-            "group by returnflag",
+            validate_sql(
+                spark,
+                f"select returnflag as {alias}, count(*) as n from lineitem "
+                "group by returnflag"),
             "lineitem") is None, alias
         got = sorted((tuple(r) for r in edge_gateway.query(
             f"select returnflag as {alias}, count(*) as n from lineitem "
@@ -886,15 +912,17 @@ def test_rewrite_review_fixes_r12b(spark, demo_web, peer_server,
         assert len(got) == 3  # row path still answers it
     # (3) lateral alias references look BACKWARD only, like Spark's
     spec = extract_aggregate_query(
-        spark,
-        "select returnflag, count(*) as n, concat(returnflag, n) as tag "
-        "from lineitem group by returnflag",
+        validate_sql(
+            spark,
+            "select returnflag, count(*) as n, concat(returnflag, n) as tag "
+            "from lineitem group by returnflag"),
         "lineitem")
     assert spec is not None  # backward reference decomposes
     assert extract_aggregate_query(
-        spark,
-        "select returnflag, concat(returnflag, n) as tag, count(*) as n "
-        "from lineitem group by returnflag",
+        validate_sql(
+            spark,
+            "select returnflag, concat(returnflag, n) as tag, count(*) as n "
+            "from lineitem group by returnflag"),
         "lineitem") is None  # forward reference: row path (which errors)
     sql = ("select returnflag, count(*) as n, concat(returnflag, n) as "
            "tag from lineitem group by returnflag order by returnflag")
@@ -904,9 +932,10 @@ def test_rewrite_review_fixes_r12b(spark, demo_web, peer_server,
     assert fast == slow and len(fast) == 3
     # (4) a user-written ORDER BY __h0 must not bind the hidden column
     assert extract_aggregate_query(
-        spark,
-        "select returnflag from lineitem group by returnflag "
-        "having sum(quantity) > 0 order by __h0",
+        validate_sql(
+            spark,
+            "select returnflag from lineitem group by returnflag "
+            "having sum(quantity) > 0 order by __h0"),
         "lineitem") is None
 
 
@@ -943,7 +972,8 @@ def test_rewriter_interaction_grid(spark, demo_web, peer_server,
                     sql += f" having {h}"
                 if o:
                     sql += f" {o}"
-                spec = extract_aggregate_query(spark, sql, "lineitem")
+                spec = extract_aggregate_query(validate_sql(spark, sql),
+                                               "lineitem")
                 assert spec is not None, sql
                 fast = edge_gateway.query(sql).collect()
                 slow = edge_gateway.query(
@@ -978,7 +1008,7 @@ def test_avg_decimal_matches_engine_type_and_value(spark):
         "select g, sum(v) as a from dec_entity group by g",
         "select g, sum(distinct v) as a from dec_entity group by g",
     ):
-        spec = extract_aggregate_query(spark, sql, "dec_entity")
+        spec = extract_aggregate_query(validate_sql(spark, sql), "dec_entity")
         assert spec is not None, sql
         partials = spark.sql(spec.partial_sql())
         merged = spec.merge(partials)
@@ -992,13 +1022,16 @@ def test_avg_decimal_matches_engine_type_and_value(spark):
     # SQL division keeps avg's s+4 digits — the gateway's declared types
     # must route such queries to the row path
     from dataweb_spark.plans.aggpush import extract_aggregate_query as _x
-    assert _x(spark, "select g, avg(v) as a from dec_entity group by g",
+    assert _x(validate_sql(spark, "select g, avg(v) as a from dec_entity "
+                                  "group by g"),
               "dec_entity", entity_types={"v": "decimal(28,4)"}) is None
-    assert _x(spark,
-              "select g, count(*) as n from dec_entity group by g "
-              "having avg(v) > 0",
+    assert _x(validate_sql(spark,
+                           "select g, count(*) as n from dec_entity "
+                           "group by g "
+                           "having avg(v) > 0"),
               "dec_entity", entity_types={"v": "decimal(28,4)"}) is None
-    assert _x(spark, "select g, avg(v) as a from dec_entity group by g",
+    assert _x(validate_sql(spark, "select g, avg(v) as a from dec_entity "
+                                  "group by g"),
               "dec_entity", entity_types={"v": "decimal(18,4)"}) is not None
 
 
@@ -1011,15 +1044,17 @@ def test_key_only_and_select_distinct_decompose(spark, demo_web,
     from dataweb_spark.plans.aggpush import extract_aggregate_query
     from dataweb_spark.plans.resolve import resolve_entity
     spec = extract_aggregate_query(
-        spark, "select distinct returnflag, linestatus from lineitem "
-        "where quantity < 5", "lineitem")
+        validate_sql(
+            spark, "select distinct returnflag, linestatus from lineitem "
+            "where quantity < 5"), "lineitem")
     assert spec is not None
     assert "GROUP BY returnflag, linestatus" in spec.partial_sql()
     # unsupported DISTINCT shapes keep the row path
     for sql in ("select distinct count(*) as n from lineitem",
                 "select distinct returnflag, 1 as one from lineitem",
                 "select distinct rand() as r from lineitem"):
-        assert extract_aggregate_query(spark, sql, "lineitem") is None, sql
+        assert extract_aggregate_query(validate_sql(spark, sql),
+                                       "lineitem") is None, sql
     grid = [
         "select returnflag from lineitem group by returnflag",
         "select returnflag, linestatus from lineitem "
@@ -1058,7 +1093,7 @@ def test_filter_clause_aggregates_decompose(spark, demo_web,
     from dataweb_spark.plans.aggpush import extract_aggregate_query
     sql = ("select returnflag, count(*) filter (where quantity > 5) as n "
            "from lineitem group by returnflag order by returnflag")
-    spec = extract_aggregate_query(spark, sql, "lineitem")
+    spec = extract_aggregate_query(validate_sql(spark, sql), "lineitem")
     assert spec is not None
     assert "CASE WHEN (quantity > 5) THEN 1 END" in spec.partial_sql()
     for q in (
@@ -1090,7 +1125,8 @@ def test_filter_clause_aggregates_decompose(spark, demo_web,
               "from lineitem",
               "select count(distinct orderkey) filter "
               "(where quantity > 5) as d from lineitem"):
-        assert extract_aggregate_query(spark, q, "lineitem") is None, q
+        assert extract_aggregate_query(validate_sql(spark, q),
+                                       "lineitem") is None, q
 
 
 # ---------------------------------------------------------------------------
@@ -1106,7 +1142,7 @@ _TOPK_SQL = (
 
 def test_topk_extractor_accepts_and_describes(spark):
     from dataweb_spark.plans.topk import extract_topk_query
-    spec = extract_topk_query(spark, _TOPK_SQL, "lineitem")
+    spec = extract_topk_query(validate_sql(spark, _TOPK_SQL), "lineitem")
     assert spec is not None
     assert spec.k == 9
     assert len(spec.order) == 5
@@ -1114,13 +1150,15 @@ def test_topk_extractor_accepts_and_describes(spark):
     assert all(d == "ASC" for _, d, _ in spec.order[1:])
     # ordinal sort keys bind to output positions
     spec2 = extract_topk_query(
-        spark, "select quantity, partkey from lineitem "
-               "order by 1 desc, 2 limit 3", "lineitem")
+        validate_sql(
+            spark, "select quantity, partkey from lineitem "
+                   "order by 1 desc, 2 limit 3"), "lineitem")
     assert spec2 is not None and spec2.order[0][0] == "`quantity`"
     # alias-referencing expression keys replay over the merged frame
     spec3 = extract_topk_query(
-        spark, "select quantity * extendedprice as w, partkey "
-               "from lineitem order by w desc, partkey limit 3",
+        validate_sql(
+            spark, "select quantity * extendedprice as w, partkey "
+                   "from lineitem order by w desc, partkey limit 3"),
         "lineitem")
     assert spec3 is not None and spec3.k == 3
 
@@ -1130,9 +1168,10 @@ def test_topk_hidden_sort_keys(spark):
     columns in a reconstructed forward query and drop after the merge."""
     from dataweb_spark.plans.topk import extract_topk_query
     spec = extract_topk_query(
-        spark, "select partkey, suppkey from lineitem "
-               "where quantity >= 30 "
-               "order by extendedprice desc, partkey limit 5", "lineitem")
+        validate_sql(
+            spark, "select partkey, suppkey from lineitem "
+                   "where quantity >= 30 "
+                   "order by extendedprice desc, partkey limit 5"), "lineitem")
     assert spec is not None and spec.hidden == ["__tk0"]
     assert spec.order[0] == ("`__tk0`", "DESC", "NULLS LAST")
     assert spec.order[1][0].strip("`") == "partkey"
@@ -1141,8 +1180,9 @@ def test_topk_hidden_sort_keys(spark):
     # a sort attr that is ALSO an output alias of something else is
     # ambiguous between ORDER BY scope and SELECT scope — row path
     amb = extract_topk_query(
-        spark, "select quantity as extendedprice, partkey from lineitem "
-               "order by extendedprice + suppkey, partkey limit 5",
+        validate_sql(
+            spark, "select quantity as extendedprice, partkey from lineitem "
+                   "order by extendedprice + suppkey, partkey limit 5"),
         "lineitem")
     assert amb is None
 
@@ -1180,7 +1220,8 @@ def test_topk_extractor_rejects_unsafe_shapes(spark):
         "select partkey from lineitem order by 1+1 limit 5",
     ]
     for q in bad:
-        assert extract_topk_query(spark, q, "lineitem") is None, q
+        assert extract_topk_query(validate_sql(spark, q),
+                                  "lineitem") is None, q
 
 
 def test_topk_pushdown_bounds_transfer_same_answer(
@@ -1253,11 +1294,11 @@ def test_topk_limit_offset(spark, peer_server, edge_gateway):
          "from lineitem where quantity >= 30 "
          "order by extendedprice desc, partkey, suppkey, linenumber, "
          "quantity limit 7 offset 4")
-    spec = extract_topk_query(spark, q, "lineitem")
+    spec = extract_topk_query(validate_sql(spark, q), "lineitem")
     assert spec is not None and spec.k == 7 and spec.offset == 4
     assert "LIMIT 11" in spec.forward_sql
     assert "OFFSET" not in spec.forward_sql.upper()
-    ol = extract_order_limit(spark, q, "lineitem")
+    ol = extract_order_limit(validate_sql(spark, q), "lineitem")
     assert ol is not None and ol[1] == 11  # row-path fetch bound = k+n
     fast = [tuple(r) for r in edge_gateway.query(q).collect()]
     slow = [tuple(r) for r in edge_gateway.query(
@@ -1265,8 +1306,9 @@ def test_topk_limit_offset(spark, peer_server, edge_gateway):
     assert sorted(fast) == sorted(slow) and len(fast) == 7
     # non-literal offsets keep the row path
     assert extract_topk_query(
-        spark, "select partkey from lineitem order by partkey "
-               "limit 5 offset -1", "lineitem") is None
+        validate_sql(
+            spark, "select partkey from lineitem order by partkey "
+                   "limit 5 offset -1"), "lineitem") is None
 
 
 # ---------------------------------------------------------------------------
@@ -1376,7 +1418,7 @@ where rk <= 3
 
 def test_grouped_topk_extractor_accepts_and_describes(spark):
     from dataweb_spark.plans.topk import extract_grouped_topk
-    s = extract_grouped_topk(spark, _GROUPED_SQL, "lineitem")
+    s = extract_grouped_topk(validate_sql(spark, _GROUPED_SQL), "lineitem")
     assert s is not None
     assert s.fn == "row_number" and s.bound == 3 and s.op == "<="
     assert s.partition == ["returnflag", "linestatus"]
@@ -1385,10 +1427,11 @@ def test_grouped_topk_extractor_accepts_and_describes(spark):
     assert "<= 3" in s.forward_sql
     # rank()/dense_rank(), `<`, hidden partition column, literal-first
     s2 = extract_grouped_topk(
-        spark,
-        "select orderkey, extendedprice from (select orderkey, "
-        "extendedprice, rank() over (partition by returnflag "
-        "order by extendedprice desc) as r from lineitem) where 4 > r",
+        validate_sql(
+            spark,
+            "select orderkey, extendedprice from (select orderkey, "
+            "extendedprice, rank() over (partition by returnflag "
+            "order by extendedprice desc) as r from lineitem) where 4 > r"),
         "lineitem")
     assert s2 is not None and s2.fn == "rank" and s2.bound == 3
     assert s2.op == "<" and s2.hidden == ["returnflag"]
@@ -1399,7 +1442,8 @@ def test_grouped_topk_extractor_rejects_unsafe_shapes(spark):
     from dataweb_spark.plans.topk import extract_grouped_topk
 
     def no(sql):
-        assert extract_grouped_topk(spark, sql, "lineitem") is None, sql
+        assert extract_grouped_topk(validate_sql(spark, sql),
+                                    "lineitem") is None, sql
 
     base = ("select orderkey, r from (select orderkey, {win} as r "
             "from lineitem) where r <= 2")
@@ -1494,6 +1538,37 @@ def test_grouped_topk_hidden_partition_end_to_end(spark, peer_server,
     assert len(frows) > 0
 
 
+def test_query_parses_user_and_template_sql_once(spark, monkeypatch,
+                                                 peer_server, edge_gateway):
+    """The gateway parses each entity query once: validate_sql's parse
+    is the only one, and every pushdown extractor walks that plan. A
+    template query over a forwardable peer therefore parses the user SQL
+    once and its forward SQL once on the coordinator (the peer's own
+    parses run on its gRPC threads)."""
+    import threading
+
+    from dataweb_spark.plans import validation
+
+    parsed: list[str] = []
+    real = validation._parse_plan
+    me = threading.get_ident()
+
+    def counting(spark_, sql):
+        if threading.get_ident() == me:
+            parsed.append(sql)
+        return real(spark_, sql)
+
+    monkeypatch.setattr(validation, "_parse_plan", counting)
+    agg = ("select returnflag, count(*) as n, sum(quantity) as q "
+           "from lineitem where quantity < 9 group by returnflag")
+    for sql in (agg, _TOPK_SQL, _GROUPED_SQL):
+        parsed.clear()
+        rows = edge_gateway.query(sql).collect()
+        assert rows, sql
+        assert len(parsed) == 2, (sql, parsed)
+        assert parsed[0] == sql
+
+
 def test_grouped_topk_presentational_order_limit(spark, peer_server,
                                                  edge_gateway):
     """r14 tail: an outer ORDER BY [LIMIT] above the rank filter — the
@@ -1509,7 +1584,7 @@ def test_grouped_topk_presentational_order_limit(spark, peer_server,
          "desc, partkey, suppkey, linenumber, quantity) as rk "
          "from lineitem where quantity >= 30) t "
          "where rk <= 3 order by returnflag, linestatus, rk limit 7")
-    s = extract_grouped_topk(spark, q, "lineitem")
+    s = extract_grouped_topk(validate_sql(spark, q), "lineitem")
     assert s is not None and s.final_limit == 7
     assert s.final_order == [("`returnflag`", "ASC", "NULLS FIRST"),
                              ("`linestatus`", "ASC", "NULLS FIRST"),
@@ -1524,21 +1599,24 @@ def test_grouped_topk_presentational_order_limit(spark, peer_server,
     # ordinal keys resolve to output positions
     q2 = q.replace("order by returnflag, linestatus, rk limit 7",
                    "order by 1, 2, 8 limit 7")
-    s2 = extract_grouped_topk(spark, q2, "lineitem")
+    s2 = extract_grouped_topk(validate_sql(spark, q2), "lineitem")
     assert s2 is not None and s2.final_order == s.final_order
 
     # rejections: bare LIMIT without ORDER (any-n semantics stays on
     # the row path), sort key not an output name, SORT BY
     assert extract_grouped_topk(
-        spark, q.replace(" order by returnflag, linestatus, rk limit 7",
-                         " limit 7"), "lineitem") is None
+        validate_sql(
+            spark, q.replace(" order by returnflag, linestatus, rk limit 7",
+                             " limit 7")), "lineitem") is None
     assert extract_grouped_topk(
-        spark, q.replace("order by returnflag, linestatus, rk limit 7",
-                         "order by orderkey limit 7"),
+        validate_sql(
+            spark, q.replace("order by returnflag, linestatus, rk limit 7",
+                             "order by orderkey limit 7")),
         "lineitem") is None
     assert extract_grouped_topk(
-        spark, q.replace("order by returnflag, linestatus, rk limit 7",
-                         "sort by returnflag"), "lineitem") is None
+        validate_sql(
+            spark, q.replace("order by returnflag, linestatus, rk limit 7",
+                             "sort by returnflag")), "lineitem") is None
 
 
 def test_grouped_topk_through_affine_mapping_bounds_transfer(

@@ -57,7 +57,7 @@ def test_cte_of_single_entity_allowed(spark):
     ents = validate_sql(
         spark, "with a as (select * from lineitem) select * from a",
         single_entity=True)
-    assert ents == {"lineitem"}
+    assert ents.entities == {"lineitem"}
 
 
 def test_self_join_single_entity_allowed(spark):
@@ -65,7 +65,7 @@ def test_self_join_single_entity_allowed(spark):
         spark, "select a.orderkey from lineitem a join lineitem b "
                "on a.orderkey = b.orderkey",
         single_entity=True)
-    assert ents == {"lineitem"}
+    assert ents.entities == {"lineitem"}
 
 
 # -- canonical queries (test/queries.py) ---------------------------------

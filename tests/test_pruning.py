@@ -16,6 +16,7 @@ from dataweb_spark.plans.pruning import (
     extract_entity_predicates, source_can_match,
 )
 from dataweb_spark.plans.resolve import PROVENANCE_SOURCE
+from dataweb_spark.plans.validation import validate_sql
 
 
 def _year_web(sf_dir: str, with_peer: bool = False) -> Web:
@@ -69,9 +70,10 @@ def _year_web(sf_dir: str, with_peer: bool = False) -> Web:
 
 def test_extract_conjuncts_ops_and_flip(spark):
     cj = extract_entity_predicates(
-        spark,
-        "select * from sales where shipdate >= date '1996-06-01' "
-        "and 10 > qty and shipdate <= date '1996-12-31'",
+        validate_sql(
+            spark,
+            "select * from sales where shipdate >= date '1996-06-01' "
+            "and 10 > qty and shipdate <= date '1996-12-31'"),
         "sales")
     assert (("shipdate", ">=", datetime.date(1996, 6, 1)) in cj
             and ("qty", "<", 10) in cj
@@ -80,8 +82,9 @@ def test_extract_conjuncts_ops_and_flip(spark):
 
 def test_extract_ignores_or_trees(spark):
     cj = extract_entity_predicates(
-        spark,
-        "select * from sales where qty > 5 or shipdate > date '1996-01-01'",
+        validate_sql(
+            spark, "select * from sales "
+                   "where qty > 5 or shipdate > date '1996-01-01'"),
         "sales")
     assert cj == []  # disjunction can't prune either source
 
@@ -92,39 +95,44 @@ def test_extract_ignores_derived_columns(spark):
     ``max(shipdate) as shipdate`` would silently drop sources the aggregate
     depends on (r1 ADVICE, pruning.py)."""
     cj = extract_entity_predicates(
-        spark,
-        "select * from (select max(shipdate) as shipdate from sales) "
-        "where shipdate < date '1995-01-01'", "sales")
+        validate_sql(
+            spark,
+            "select * from (select max(shipdate) as shipdate from sales) "
+            "where shipdate < date '1995-01-01'"), "sales")
     assert cj == []
     # renamed column: commitdate aliased to shipdate
     cj2 = extract_entity_predicates(
-        spark,
-        "select * from (select qty as shipdate from sales) "
-        "where shipdate < date '1995-01-01'", "sales")
+        validate_sql(
+            spark,
+            "select * from (select qty as shipdate from sales) "
+            "where shipdate < date '1995-01-01'"), "sales")
     assert cj2 == []
     # plain select-list projection between filter and relation (HAVING-like
     # outer filter) — also derived scope, not harvested
     cj3 = extract_entity_predicates(
-        spark,
-        "select * from (select shipdate, qty from sales) "
-        "where shipdate < date '1995-01-01'", "sales")
+        validate_sql(
+            spark,
+            "select * from (select shipdate, qty from sales) "
+            "where shipdate < date '1995-01-01'"), "sales")
     assert cj3 == []
 
 
 def test_extract_allows_alias_and_nested_filter(spark):
     """Transparent wrappers (table alias, stacked WHERE) still harvest."""
     cj = extract_entity_predicates(
-        spark,
-        "select qty from sales s where s.shipdate >= date '1996-06-01'",
+        validate_sql(
+            spark,
+            "select qty from sales s where s.shipdate >= date '1996-06-01'"),
         "sales")
     assert ("shipdate", ">=", datetime.date(1996, 6, 1)) in cj
 
 
 def test_extract_scopes_to_single_relation(spark):
     cj = extract_entity_predicates(
-        spark,
-        "select * from sales s join other o on s.qty = o.qty "
-        "where o.x > 3", "sales")
+        validate_sql(
+            spark,
+            "select * from sales s join other o on s.qty = o.qty "
+            "where o.x > 3"), "sales")
     assert cj == []  # filter sits above a 2-relation subtree
 
 
@@ -229,22 +237,25 @@ def test_self_join_yields_no_conjuncts(spark):
     sql = ("select * from (select * from lineitem where quantity < 5) a "
            "join (select * from lineitem where quantity > 40) b "
            "on a.orderkey = b.orderkey")
-    assert extract_entity_predicates(spark, sql, "lineitem") == []
+    assert extract_entity_predicates(validate_sql(spark, sql),
+                                     "lineitem") == []
 
 
 def test_single_reference_still_harvests(spark):
     from dataweb_spark.plans.pruning import extract_entity_predicates
     out = extract_entity_predicates(
-        spark, "select * from lineitem where quantity < 5", "lineitem")
+        validate_sql(spark, "select * from lineitem where quantity < 5"),
+        "lineitem")
     assert ("quantity", "<", 5) in out
 
 
 def test_extract_entity_limit_plain(spark):
     from dataweb_spark.plans.pruning import extract_entity_limit
     assert extract_entity_limit(
-        spark, "select * from lineitem limit 7", "lineitem") == 7
+        validate_sql(spark, "select * from lineitem limit 7"), "lineitem") == 7
     assert extract_entity_limit(
-        spark, "select quantity from lineitem limit 3", "lineitem") == 3
+        validate_sql(spark, "select quantity from lineitem limit 3"),
+        "lineitem") == 3
 
 
 def test_extract_entity_limit_refuses_unsafe_shapes(spark):
@@ -256,7 +267,8 @@ def test_extract_entity_limit_refuses_unsafe_shapes(spark):
         "select * from lineitem",                               # no limit
         "select distinct returnflag from lineitem limit 2",     # distinct
     ):
-        assert extract_entity_limit(spark, sql, "lineitem") is None, sql
+        assert extract_entity_limit(validate_sql(spark, sql),
+                                    "lineitem") is None, sql
 
 
 def test_extract_entity_limit_refuses_multi_reference(spark):
@@ -265,21 +277,22 @@ def test_extract_entity_limit_refuses_multi_reference(spark):
     from dataweb_spark.plans.pruning import extract_entity_limit
     sql = ("select * from (select * from lineitem limit 5) a "
            "join lineitem b on a.orderkey = b.orderkey")
-    assert extract_entity_limit(spark, sql, "lineitem") is None
+    assert extract_entity_limit(validate_sql(spark, sql), "lineitem") is None
 
 
 def test_extract_referenced_columns_tokens(spark):
     from dataweb_spark.plans.pruning import extract_referenced_columns
     ref = extract_referenced_columns(
-        spark, "select quantity, sum(extendedprice) as s from lineitem "
-               "where returnflag = 'N' group by quantity")
+        validate_sql(
+            spark, "select quantity, sum(extendedprice) as s from lineitem "
+                   "where returnflag = 'N' group by quantity"))
     assert {"quantity", "extendedprice", "returnflag"} <= ref
 
 
 def test_extract_referenced_columns_star_means_everything(spark):
     from dataweb_spark.plans.pruning import extract_referenced_columns
     assert extract_referenced_columns(
-        spark, "select * from lineitem") is None
+        validate_sql(spark, "select * from lineitem")) is None
 
 
 def test_output_shape_star_probe(spark):
@@ -296,9 +309,9 @@ def test_output_shape_star_probe(spark):
                "where quantity < 5 group by returnflag order by returnflag",
                "select quantity + 1 as q from lineitem limit 3"]
     for sql in star:
-        assert output_shape_has_star(spark, sql), sql
+        assert output_shape_has_star(validate_sql(spark, sql)), sql
     for sql in no_star:
-        assert not output_shape_has_star(spark, sql), sql
+        assert not output_shape_has_star(validate_sql(spark, sql)), sql
 
 
 # -- zone maps: auto-collected bounds ---------------------------------------

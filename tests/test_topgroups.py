@@ -38,6 +38,7 @@ from dataweb_spark.plans.topgroups import (
     plan_topk_groups,
     run_topk_groups,
 )
+from dataweb_spark.plans.validation import validate_sql
 
 
 # ---------------------------------------------------------------------------
@@ -49,7 +50,8 @@ _TYPES = {"g": "string", "h": "bigint", "v": "double", "w": "double"}
 
 
 def _plan(spark, sql):
-    spec = extract_aggregate_query(spark, sql, "e", entity_columns=_COLS,
+    spec = extract_aggregate_query(validate_sql(spark, sql), "e",
+                                   entity_columns=_COLS,
                                    entity_types=_TYPES)
     if spec is None:
         return None, None
@@ -147,7 +149,7 @@ def _fake_union(spark, views):
 
 
 def _spec_plan(spark, sql, types):
-    spec = extract_aggregate_query(spark, sql, "e",
+    spec = extract_aggregate_query(validate_sql(spark, sql), "e",
                                    entity_columns=set(types),
                                    entity_types=types)
     assert spec is not None
@@ -619,7 +621,7 @@ def test_protocol_matches_direct_sql_property(spark, data, k, split,
            f"{'last' if direction == 'desc' else 'first'}, g asc "
            f"limit {k}")
     types = {"g": "string", "v": "double"}
-    spec = extract_aggregate_query(spark, sql, "e",
+    spec = extract_aggregate_query(validate_sql(spark, sql), "e",
                                    entity_columns=set(types),
                                    entity_types=types)
     assert spec is not None

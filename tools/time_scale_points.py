@@ -5,10 +5,11 @@ Produces the BASELINE.md 10x-scale sanity tables: run
 ``tools/make_scaled_data.py`` first (sf0.1 -> ~sf1 under /tmp/sfdata1),
 then
 
-    python tools/time_scale_points.py [names...]
+    python tools/time_scale_points.py [names...] > sf1_points.json
 
-Defaults to the r8/r9 operator set. Writes /tmp/sf1_points.json and
-prints one line per (scale, query)."""
+Defaults to the r8/r9 operator set. Prints one progress line per (scale,
+query) to stderr and the timings as JSON to stdout. The session uses
+``get_spark``'s default core count (``SPARK_GRAFT_CPUS``)."""
 
 from __future__ import annotations
 
@@ -32,8 +33,7 @@ def main() -> None:
     from dataweb_spark.session import get_spark
 
     names = sys.argv[1:] or DEFAULT
-    spark = get_spark("scale-points", master="local[32]",
-                      extra_conf={"spark.sql.shuffle.partitions": "32"})
+    spark = get_spark("scale-points")
     qs = entry.queries()
     out: dict = {}
     for sf_label, sf_dir in [("sf0.1", "/root/testdata/sf0.1"),
@@ -49,9 +49,9 @@ def main() -> None:
             out[sf_label][name] = {"median_s": round(med, 2),
                                    "runs": [round(t, 2) for t in times],
                                    "rows": n}
-            print(f"{sf_label} {name}: {med:.2f}s ({n} rows)", flush=True)
-    with open("/tmp/sf1_points.json", "w") as f:
-        json.dump(out, f, indent=1)
+            print(f"{sf_label} {name}: {med:.2f}s ({n} rows)",
+                  file=sys.stderr, flush=True)
+    json.dump(out, sys.stdout, indent=1)
 
 
 if __name__ == "__main__":
