@@ -17,6 +17,7 @@ Reference entry points (SURVEY.md §3):
 from __future__ import annotations
 
 import json
+import threading
 from dataclasses import dataclass
 from typing import Iterator
 
@@ -52,6 +53,12 @@ from dataweb_spark.plans.validation import (
     ValidationError,
     validate_sql,
 )
+
+# Temp views are session-global: two template plans binding the entity
+# view at once (a peer re-planning concurrent endpoint retries) would each
+# analyze the other's source. Binding and analysis make no peer call, so
+# the lock is never held across the network.
+_VIEW_BIND_LOCK = threading.Lock()
 
 
 def _forwardable_flight_peer(relay, source, entity_name: str):
@@ -492,14 +499,15 @@ class QueryGateway:
                 for decl_relay, rm in reversed(chain):
                     view = _apply_remote_mapping(self.spark, decl_relay,
                                                  rm, view)
-                view.drop(PROVENANCE_RELAY, PROVENANCE_SOURCE) \
-                    .createOrReplaceTempView(entity_name)
-                # may shadow a canonical table name — force the next
-                # register_views to rebind the raw views
                 from dataweb_spark.session import view_memo_invalidate
-                view_memo_invalidate(self.spark)
-                results.append((relay_name, source.name,
-                                self.spark.sql(sql)))
+                with _VIEW_BIND_LOCK:
+                    view.drop(PROVENANCE_RELAY, PROVENANCE_SOURCE) \
+                        .createOrReplaceTempView(entity_name)
+                    # may shadow a canonical table name — force the next
+                    # register_views to rebind the raw views
+                    view_memo_invalidate(self.spark)
+                    results.append((relay_name, source.name,
+                                    self.spark.sql(sql)))
 
             # Replica groups: members declare IDENTICAL data, so exactly
             # ONE is queried per group with declared-order failover —
