@@ -447,10 +447,6 @@ class SourcePermission:
     def deny_all() -> "SourcePermission":
         return SourcePermission(frozenset(), "false")
 
-    @staticmethod
-    def allow_all(columns) -> "SourcePermission":
-        return SourcePermission(frozenset(columns), "true")
-
     def union(self, other: "SourcePermission") -> "SourcePermission":
         return SourcePermission(
             self.allowed_columns | other.allowed_columns,

@@ -14,8 +14,6 @@ all of this from its downstream engines and has no counterpart):
   bucketing so repeated equi-joins/aggregations on the same key avoid the
   shuffle entirely (Spark reuses the bucketing as the required
   distribution).
-* :func:`repartition_by_key` — co-partition two frames before an iterative
-  or multi-stage pipeline so downstream stages reuse one exchange.
 """
 
 from __future__ import annotations
@@ -38,15 +36,6 @@ def salted_join(left: DataFrame, right: DataFrame, on: str,
         "_salt", F.explode(F.array(*[F.lit(i) for i in range(salt)])))
     out = salted_l.join(salted_r, on=[on, "_salt"], how=how)
     return out.drop("_salt")
-
-
-def repartition_by_key(dfs: list[DataFrame], key: str,
-                       num_partitions: int | None = None) -> list[DataFrame]:
-    """Hash-co-partition several frames on the same key so a downstream
-    multi-way join/agg pipeline reuses a single exchange per input."""
-    if num_partitions:
-        return [df.repartition(num_partitions, key) for df in dfs]
-    return [df.repartition(key) for df in dfs]
 
 
 def write_bucketed(df: DataFrame, table_name: str, key: str,

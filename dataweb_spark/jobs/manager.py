@@ -24,7 +24,6 @@ analog, ``result_manager.rs:94-104``).
 from __future__ import annotations
 
 import os
-import tempfile
 import threading
 import time
 import uuid
@@ -47,6 +46,7 @@ from dataweb_spark.plans.resolve import (
     build_source_view,
 )
 from dataweb_spark.plans.validation import ValidationError, validate_sql
+from dataweb_spark.session import scratch_dir
 
 QUEUED = "QUEUED"
 IN_PROGRESS = "IN_PROGRESS"
@@ -106,8 +106,7 @@ class JobManager:
         self.web = web
         self.relay_name = relay_name
         self.gateway = QueryGateway(spark, web, relay_name)
-        self.results_dir = results_dir or tempfile.mkdtemp(
-            prefix="dataweb_results_")
+        self.results_dir = results_dir or scratch_dir("dataweb_results_")
         self._jobs: dict[str, QueryJob] = {}
         self._lock = threading.Lock()       # job table + temp-view analysis
         self._pool = ThreadPoolExecutor(max_workers=max_workers,

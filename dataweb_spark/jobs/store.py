@@ -42,6 +42,7 @@ from dataweb_spark.jobs.manager import (
     JobNotReady,
 )
 from dataweb_spark.plans.resolve import PROVENANCE_RELAY, PROVENANCE_SOURCE
+from dataweb_spark.session import scratch_dir
 
 
 class _JobQueueCommon:
@@ -231,10 +232,9 @@ class InMemoryJobQueue(_JobQueueCommon):
     and the Flight ``do_put`` path take either."""
 
     def __init__(self, root: str | None = None):
-        import tempfile
         import threading
 
-        self.root = root or tempfile.mkdtemp(prefix="dw_jobs_")
+        self.root = root or scratch_dir("dw_jobs_")
         os.makedirs(os.path.join(self.root, "results"), exist_ok=True)
         self._lock = threading.Lock()
         self._queued: list[dict] = []

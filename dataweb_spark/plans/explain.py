@@ -93,9 +93,11 @@ def explain_entity(web: Web, relay_name: str, entity_name: str,
                    include_provenance: bool = False,
                    allow_partial: bool = False,
                    partial_aggregate: bool = True,
-                   topk_pushdown: bool = True) -> list[dict]:
+                   topk_pushdown: bool = True,
+                   facts=None) -> list[dict]:
     """Rows for one entity's resolution under the parsed query's
-    pushdown facts.
+    pushdown facts (``facts``, when the caller already derived them for
+    a multi-entity query).
 
     The flag quartet mirrors ``QueryGateway.query``'s signature and
     defaults: the template path only runs with ``partial_aggregate`` or
@@ -116,8 +118,9 @@ def explain_entity(web: Web, relay_name: str, entity_name: str,
             partial_aggregate, topk_pushdown)
     if template_sql is not None:
         q = validate_sql(q.spark, template_sql, single_entity=True)
-    facts = pushdown_facts(q, web.relay(relay_name).entities,
-                           topk=topk_pushdown)
+    if facts is None:
+        facts = pushdown_facts(q, web.relay(relay_name).entities,
+                               topk=topk_pushdown)
     rows: list[dict] = []
     _walk(web, relay_name, entity_name, facts.conjuncts[entity_name],
           facts.limits.get(entity_name), facts.referenced, set(), rows,
@@ -268,8 +271,14 @@ def explain_federation(spark: SparkSession, web: Web, relay_name: str,
     so the report models the SAME configuration the caller will execute
     with — e.g. ``include_provenance=True`` disables the template path
     in both places (advice-caught r14)."""
+    from dataweb_spark.plans.gateway import pushdown_facts
+
     q = validate_sql(spark, sql)
     relay = web.relay(relay_name)
+    # the template path only decomposes single-entity queries, so a join's
+    # facts are the same for every entity: derive them once
+    facts = (pushdown_facts(q, relay.entities, topk=topk_pushdown)
+             if len(q.entities) > 1 else None)
     rows: list[dict] = []
     for e in sorted(q.entities):
         if e in relay.entities:
@@ -278,7 +287,7 @@ def explain_federation(spark: SparkSession, web: Web, relay_name: str,
                 include_provenance=include_provenance,
                 allow_partial=allow_partial,
                 partial_aggregate=partial_aggregate,
-                topk_pushdown=topk_pushdown))
+                topk_pushdown=topk_pushdown, facts=facts))
     from pyspark.sql.types import (IntegerType, StringType, StructField,
                                    StructType)
     schema = StructType(

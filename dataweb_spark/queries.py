@@ -25,6 +25,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dataweb_spark.session import scratch_dir
+
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
@@ -41,19 +43,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 "ts", F.timestamp_micros(F.expr("ts div 1000")))
         return df
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def _scratch_dir(prefix: str) -> str:
-    """A new temporary directory for a declared query's index, checkpoint
-    or staged corpus, removed when the interpreter exits. Not earlier: the
-    DataFrame a query returns reads these files lazily."""
-    import atexit
-    import shutil
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix=prefix)
-    atexit.register(shutil.rmtree, d, ignore_errors=True)
-    return d
 
 
 def register_views(spark: SparkSession, sf_dir: str,
@@ -3604,7 +3593,7 @@ def _index_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
     docs = spark.table("documents")
     corpus = docs.where("doc_id % 5 != 0")
-    idx = _scratch_dir("dw_idx_classify_")
+    idx = scratch_dir("dw_idx_classify_")
     DI.build_dedup_index(corpus, idx)
     exact_new = (corpus.where("doc_id % 20 = 1")
                  .select((F.col("doc_id") + 100000).alias("doc_id"), "text"))
@@ -3649,7 +3638,7 @@ def _index_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spark.table("documents")
     base = docs.where("doc_id % 5 != 0 and doc_id % 2 = 0")
     delta = docs.where("doc_id % 5 != 0 and doc_id % 2 = 1")
-    idx = _scratch_dir("dw_idx_incr_")
+    idx = scratch_dir("dw_idx_incr_")
     DI.build_dedup_index(base, idx)
     DI.append_batch(delta, idx)
     corpus = base.unionByName(delta)
@@ -3697,10 +3686,10 @@ def _index_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
     docs = spark.table("documents").select("doc_id", "text")
     corpus0 = docs.where("doc_id % 5 != 0")
-    idx = _scratch_dir("dw_idx_gate_")
-    corpus_dir = _scratch_dir("dw_idx_gate_c_") + "/corpus"
-    in_dir = _scratch_dir("dw_idx_gate_in_")
-    cp = _scratch_dir("dw_idx_gate_cp_")
+    idx = scratch_dir("dw_idx_gate_")
+    corpus_dir = scratch_dir("dw_idx_gate_c_") + "/corpus"
+    in_dir = scratch_dir("dw_idx_gate_in_")
+    cp = scratch_dir("dw_idx_gate_cp_")
     DI.build_dedup_index(corpus0, idx)
     corpus0.write.parquet(corpus_dir)
 
@@ -4904,7 +4893,7 @@ def _streaming_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
                       F.col("window.end").alias("win_end"),
                       "event_type", "n", "total_value"))
     out = E.run_available_now(
-        merged, _scratch_dir("dw_cp_slide_"))
+        merged, scratch_dir("dw_cp_slide_"))
     t = (out.where(F.minute("win_start") == 0)
             .select(F.lit("tumbling_1h").alias("kind"),
                     "win_start", "win_end", "event_type", "n",
@@ -4954,7 +4943,7 @@ def _streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dataweb_spark.streaming import events as E
     doubled = E.read_event_stream(spark, sf_dir).union(
         E.read_event_stream(spark, sf_dir))
-    cp = _scratch_dir("dw_cp_dedup_")
+    cp = scratch_dir("dw_cp_dedup_")
     # dropDuplicatesWithinWatermark emits every row in the data batch it
     # arrives in — the no-data finalize batch only evicts state, so a
     # finite drain skips it (~40% of the drain; run_available_now doc).
@@ -4990,7 +4979,7 @@ def _streaming_media_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dataweb_spark.functions import multimodal as M
     from dataweb_spark.streaming.events import run_available_now
 
-    work = _scratch_dir("dw_media_stream_")
+    work = scratch_dir("dw_media_stream_")
     media_dir = f"{work}/media"
     media = M.synthesize_cross_container_media(spark, n=16)
     media.write.parquet(media_dir)
@@ -5020,7 +5009,7 @@ def _streaming_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from dataweb_spark.streaming import events as E
     stream = E.read_event_stream(spark, sf_dir)
-    cp = _scratch_dir("dw_cp_state_")
+    cp = scratch_dir("dw_cp_state_")
     out = E.run_available_now(E.stateful_user_totals(stream), cp,
                               output_mode="update")
     w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
@@ -5047,7 +5036,7 @@ def _streaming_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     same user), drained with availableNow — equals the batch theta join."""
     from dataweb_spark.streaming import events as E
     stream = E.read_event_stream(spark, sf_dir)
-    cp = _scratch_dir("dw_cp_attr_")
+    cp = scratch_dir("dw_cp_attr_")
     out = E.run_available_now(
         E.attribution_join(stream.where("user_id < 25"),
                            window_minutes=240, watermark="5 hours"), cp)
@@ -5080,7 +5069,7 @@ def _streaming_fed_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     web = build_demo_web(sf_dir)
     sdf = stream_entity_view(spark, web, "na_us", "lineitem")
-    cp = _scratch_dir("dw_cp_fed_ingest_")
+    cp = scratch_dir("dw_cp_fed_ingest_")
     out = run_available_now(sdf, cp)
     return (out.groupBy("returnflag")
                .agg(F.count("*").alias("n"),
@@ -5847,7 +5836,7 @@ def _media_index_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
                                               "content", "meta"])
 
     corpus = M._synth_range(spark, 24).mapInPandas(corpus_gen, schema=M.MEDIA_SCHEMA)
-    idx = _scratch_dir("dw_media_idx_")
+    idx = scratch_dir("dw_media_idx_")
     MI.build_media_index(corpus, idx)
 
     def batch_gen(batches):
@@ -6776,7 +6765,7 @@ def _warc_directory_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
     blobs = W.synthesize_warc_blobs(spark.table("documents"),
                                     docs_per_blob=10, compress=True)
-    d = _scratch_dir("dw_warc_dir_")
+    d = scratch_dir("dw_warc_dir_")
     W.write_warc_directory(blobs, d)
     recs = W.parse_warc_records(W.read_warc_directory(spark, d))
     return (recs.withColumn("source", F.split("target_uri", "/").getItem(3))
@@ -6955,7 +6944,7 @@ def _media_index_video_near(spark: SparkSession, sf_dir: str) -> DataFrame:
                                               "content", "meta"])
 
     corpus = M._synth_range(spark, 8).mapInPandas(corpus_gen, schema=M.MEDIA_SCHEMA)
-    idx = _scratch_dir("dw_media_vnear_")
+    idx = scratch_dir("dw_media_vnear_")
     MI.build_media_index(corpus, idx)
 
     def batch_gen(batches):
@@ -7794,7 +7783,7 @@ def _streaming_crawl_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
                'http://s' || ((doc_id % 251) % 23) || '.com/p/'
                  || (doc_id % 251) as url
         from documents""")
-    root = _scratch_dir("dw_crawl_gate_")
+    root = scratch_dir("dw_crawl_gate_")
     drop, state, cp = f"{root}/drop", f"{root}/state", f"{root}/cp"
     for parity in (0, 1):
         (synth.where(F.col("doc_id") % 2 == parity)
@@ -7908,7 +7897,7 @@ def _media_index_audio_near(spark: SparkSession, sf_dir: str) -> DataFrame:
                                               "content", "meta"])
 
     corpus = M._synth_range(spark, 6).mapInPandas(corpus_gen, schema=M.MEDIA_SCHEMA)
-    idx = _scratch_dir("dw_media_anear_")
+    idx = scratch_dir("dw_media_anear_")
     MI.build_media_index(corpus, idx)
 
     def batch_gen(batches):
@@ -8029,7 +8018,7 @@ def _media_index_rate_normalized(spark: SparkSession,
                                               "content", "meta"])
 
     corpus = M._synth_range(spark, 7).mapInPandas(corpus_gen, schema=M.MEDIA_SCHEMA)
-    idx = _scratch_dir("dw_media_rate_")
+    idx = scratch_dir("dw_media_rate_")
     MI.build_media_index(corpus, idx)
 
     def batch_gen(batches):
@@ -8965,7 +8954,7 @@ def _embedding_index_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
     emb = spark.table("embeddings").select("vec_id", "embedding")
     corpus = emb.where("vec_id % 5 != 0")
-    idx = _scratch_dir("dw_emb_idx_classify_")
+    idx = scratch_dir("dw_emb_idx_classify_")
     EI.build_embedding_index(corpus, idx, id_col="vec_id",
                              vec_col="embedding", dim=64)
     copies = corpus.where("vec_id % 20 = 1").select(

@@ -92,6 +92,19 @@ def view_memo_invalidate(spark: SparkSession) -> None:
     _VIEW_MEMO.pop(spark, None)
 
 
+def scratch_dir(prefix: str) -> str:
+    """A new temporary directory, removed when the interpreter exits — for
+    indexes, checkpoints, staged corpora and job results. Not earlier: the
+    DataFrames read from these files are lazy."""
+    import atexit
+    import shutil
+    import tempfile
+
+    d = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    return d
+
+
 def get_spark(app_name: str = "dataweb_spark", master: str | None = None,
               extra_conf: dict[str, str] | None = None) -> SparkSession:
     """Build (or fetch) a SparkSession with engine defaults.

@@ -176,7 +176,7 @@ def flightsql_read(spark, host: str, port: int, sql: str):
     for ``do_get``. Engines without the prepared-statement actions get
     the direct ``CommandStatementQuery`` envelope instead.
     """
-    from pyspark.sql.pandas.types import from_arrow_schema
+    from dataweb_spark.sources.readers import item_frame
 
     client = flight.connect(f"grpc://{host}:{port}")
     handle = None
@@ -205,20 +205,15 @@ def flightsql_read(spark, host: str, port: int, sql: str):
             except flight.FlightError:
                 pass  # the server's handle cap bounds a failed close
     arrow_schema = info.schema
-    out_schema = from_arrow_schema(arrow_schema)
-    tickets = [(ep.ticket.ticket,) for ep in info.endpoints]
 
-    def fetch(batch_iter):
+    def fetch(tk):
         import pyarrow.flight as fl
         c = fl.connect(f"grpc://{host}:{port}")
-        for batch in batch_iter:
-            for tk in batch.column("ticket").to_pylist():
-                for chunk in c.do_get(fl.Ticket(tk)):
-                    if chunk.data.num_rows:
-                        yield pa.Table.from_batches([chunk.data]) \
-                                .cast(arrow_schema).to_batches()[0]
+        for chunk in c.do_get(fl.Ticket(tk)):
+            if chunk.data.num_rows:
+                yield pa.Table.from_batches([chunk.data]) \
+                        .cast(arrow_schema).to_batches()[0]
         c.close()
 
-    tdf = spark.createDataFrame(tickets, "ticket binary") \
-               .repartition(max(len(tickets), 1))
-    return tdf.mapInArrow(fetch, out_schema)
+    return item_frame(spark, [ep.ticket.ticket for ep in info.endpoints],
+                      fetch, arrow_schema)

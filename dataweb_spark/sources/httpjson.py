@@ -151,21 +151,23 @@ def trino_read(spark, base_url: str, sql: str):
     engine parallelizes internally; transfer narrowing comes from the
     dialect pushdown upstream). For large un-aggregated pulls, see
     :func:`trino_read_partitioned`."""
-    from pyspark.sql.pandas.types import from_arrow_schema
+    return _chains_frame(spark, base_url, [sql],
+                         trino_resolve_schema(base_url, sql))
 
-    arrow_schema = trino_resolve_schema(base_url, sql)
-    out_schema = from_arrow_schema(arrow_schema)
 
-    def fetch(batch_iter):
-        for batch in batch_iter:
-            for _ in range(batch.num_rows):
-                for page in _walk_pages(base_url, sql):
-                    rows = page.get("data") or []
-                    if rows:
-                        yield _rows_to_batch(rows, arrow_schema)
+def _chains_frame(spark, base_url: str, statements: list[str],
+                  arrow_schema: pa.Schema):
+    """One partition per statement (``readers.item_frame``); each task
+    walks its statement's page chain."""
+    from dataweb_spark.sources.readers import item_frame
 
-    seed = spark.createDataFrame([(1,)], "task int").repartition(1)
-    return seed.mapInArrow(fetch, out_schema)
+    def fetch(stmt):
+        for page in _walk_pages(base_url, stmt):
+            rows = page.get("data") or []
+            if rows:
+                yield _rows_to_batch(rows, arrow_schema)
+
+    return item_frame(spark, statements, fetch, arrow_schema)
 
 
 def partition_predicates(column: str, lower: int, upper: int,
@@ -199,26 +201,12 @@ def trino_read_partitioned(spark, base_url: str, sql: str, column: str,
     ``column`` is the engine-side name in the result of ``sql``; callers
     must not push a LIMIT into ``sql`` (per-chain limits would each pick
     their own rows)."""
-    from pyspark.sql.pandas.types import from_arrow_schema
-
     preds = partition_predicates(column, lower, upper, num_partitions)
     subs = [f"SELECT * FROM ({sql}) q WHERE {p}" for p in preds]
     # Schema from the ORIGINAL statement (a sub-range may be empty, which
     # would force all-string inference on undeclared types).
-    arrow_schema = trino_resolve_schema(base_url, sql)
-    out_schema = from_arrow_schema(arrow_schema)
-
-    def fetch(batch_iter):
-        for batch in batch_iter:
-            for sub in batch.column("sub").to_pylist():
-                for page in _walk_pages(base_url, sub):
-                    rows = page.get("data") or []
-                    if rows:
-                        yield _rows_to_batch(rows, arrow_schema)
-
-    seed = spark.createDataFrame([(s,) for s in subs], "sub string") \
-                .repartition(len(subs))
-    return seed.mapInArrow(fetch, out_schema)
+    return _chains_frame(spark, base_url, subs,
+                         trino_resolve_schema(base_url, sql))
 
 
 # ---------------------------------------------------------------------------

@@ -18,8 +18,9 @@ and the task SQL itself is executed by Catalyst against the returned frame:
 Scale notes: file reads are planned by Spark's FileSourceScanExec with
 partition pruning + predicate pushdown; we never materialize on the driver.
 Flight-peer reads default to the executor-side ``mapInArrow`` path
-(partition per endpoint, batches never touch the driver) and narrow the
-peer query instead of shipping the whole entity.
+(one partition per endpoint with no Exchange, :func:`item_frame`; batches
+never touch the driver) and narrow the peer query instead of shipping the
+whole entity.
 """
 
 from __future__ import annotations
@@ -117,6 +118,27 @@ def content_memo(spark: SparkSession, key: tuple, path: str, build):
     out = build()
     memo[key] = (sig, out)
     return out
+
+
+def item_frame(spark: SparkSession, items: list, fetch,
+               arrow_schema) -> DataFrame:
+    """One partition per work item (a Flight ticket, a SQL statement),
+    with no Exchange: ``spark.range`` makes one slice per item and each
+    task looks its item up by index in the task closure, then streams
+    ``fetch(item)``'s Arrow record batches of ``arrow_schema`` — the
+    ``WebEntityScan`` partition-per-endpoint shape
+    (``webengine/src/web_source.rs:163-300``). Every executor-side scan
+    of tickets or statements goes through here."""
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    def run(batch_iter):
+        for batch in batch_iter:
+            for i in batch.column(0).to_pylist():
+                yield from fetch(items[i])
+
+    n = len(items)
+    return spark.range(0, n, 1, max(n, 1)).mapInArrow(
+        run, from_arrow_schema(arrow_schema))
 
 
 _FLOATS = ("float", "double")
@@ -647,7 +669,8 @@ def read_connection_table(spark: SparkSession, conn: DataConnection,
         ident = flight_client_identity(conn)
         if source.options.get("distribute", "true") != "false":
             # DEFAULT: partition-per-endpoint executor-side streams
-            # (WebEntityScan analog) — batches never touch the driver.
+            # (WebEntityScan analog, no shuffle: ``item_frame``) —
+            # batches never touch the driver.
             # Task retries re-plan via get_flight_info (single-use tickets).
             return flight_read_distributed(spark, host, port, sql,
                                            principal, mode,

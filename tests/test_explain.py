@@ -343,3 +343,27 @@ def test_explain_mirrors_engine_aggregate(spark):
         spark, web, "eng_x", q, partial_aggregate=False).collect()
         }["items_duck"]
     assert row["action"] == "scan"
+
+
+def test_explain_join_derives_facts_once(spark, demo_web, monkeypatch):
+    """A join never takes the template path, so its pushdown facts are
+    the same for every entity: EXPLAIN derives them once, not once per
+    entity."""
+    from dataweb_spark.plans import gateway
+
+    calls = []
+    real = gateway.pushdown_facts
+
+    def counting(*args, **kwargs):
+        calls.append(args)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(gateway, "pushdown_facts", counting)
+    df = explain_federation(
+        spark, demo_web, "global",
+        "select c.mktsegment, count(*) as n "
+        "from customer c join orders o on c.custkey = o.custkey "
+        "where o.totalprice > 1000 group by c.mktsegment")
+    entities = {r.entity for r in df.collect()}
+    assert entities == {"customer", "orders"}
+    assert len(calls) == 1

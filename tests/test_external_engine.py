@@ -504,6 +504,30 @@ def test_trino_partitioned_parallel_page_chains(spark, sf_dir,
                .collect()[0][0]) < 1e-6
 
 
+def test_trino_chains_one_partition_each_no_exchange(spark, trino_engine):
+    """Range-split page chains spread their statements by task index, not
+    by a shuffle: one partition per chain and no Exchange in the executed
+    plan; with zero statements the frame is empty and keeps the schema
+    the engine advertised."""
+    from dataweb_spark.sources.httpjson import (
+        _chains_frame,
+        trino_read_partitioned,
+        trino_resolve_schema,
+    )
+
+    sql = "select l_orderkey, l_quantity from lineitem_tbl"
+    df = trino_read_partitioned(spark, trino_engine.base_url, sql,
+                                "l_orderkey", 0, 6000, 4)
+    assert df.rdd.getNumPartitions() == 4
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
+
+    empty = _chains_frame(spark, trino_engine.base_url, [],
+                          trino_resolve_schema(trino_engine.base_url, sql))
+    assert empty.schema == df.schema
+    assert empty.count() == 0
+
+
 def test_trino_partition_predicates_disjoint_complete():
     from dataweb_spark.sources.httpjson import partition_predicates
 

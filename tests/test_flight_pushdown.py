@@ -355,6 +355,32 @@ def test_distributed_scan_retries_consumed_ticket(spark, demo_web,
     assert df.count() == n_expected   # second run MUST re-plan (retry path)
 
 
+def test_ticket_scan_one_partition_per_endpoint_no_exchange(spark,
+                                                           peer_server):
+    """Executor-side Flight scans spread their tickets by task index, not
+    by a shuffle: one partition per endpoint (the demo peer maps lineitem
+    to 2 sources) and no Exchange in the executed plan; with zero tickets
+    the frame is empty and keeps the advertised schema."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from dataweb_spark.sources.flight_service import (
+        _tickets_frame,
+        flight_read_distributed,
+    )
+
+    df = flight_read_distributed(spark, "127.0.0.1", peer_server.port,
+                                 "select returnflag, quantity from lineitem",
+                                 mode="template")
+    assert df.rdd.getNumPartitions() == 2
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
+
+    empty = _tickets_frame(spark, "127.0.0.1", peer_server.port, [],
+                           to_arrow_schema(df.schema))
+    assert empty.schema == df.schema
+    assert empty.count() == 0
+
+
 def test_template_aggregate_forwarded_to_peer(spark, demo_web, peer_server,
                                               edge_gateway):
     """Relay→relay template forwarding (flight.rs:237-309): an aggregate
