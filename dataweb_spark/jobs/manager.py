@@ -36,14 +36,15 @@ from pyspark.sql import functions as F
 
 from dataweb_spark.catalog.model import Web
 from dataweb_spark.plans.gateway import (
-    PushdownFacts,
     QueryGateway,
+    bind_template_view,
     pushdown_facts,
 )
 from dataweb_spark.plans.resolve import (
     PROVENANCE_RELAY,
     PROVENANCE_SOURCE,
-    build_source_view,
+    failover,
+    plan_entity,
 )
 from dataweb_spark.plans.validation import ValidationError, validate_sql
 from dataweb_spark.session import scratch_dir
@@ -57,7 +58,8 @@ CANCELLED = "CANCELLED"
 
 @dataclass
 class QueryTask:
-    """One per mapped source — the ``QueryTask`` row analog
+    """One per mapped source (per replica group: ``source`` names the
+    member that answered) — the ``QueryTask`` row analog
     (``core/src/model/query.rs:112-129``)."""
     task_id: str
     relay: str
@@ -118,9 +120,11 @@ class JobManager:
                mode: str = "template") -> str:
         """Validate, map to tasks, enqueue; returns the job id.
 
-        ``template`` mode = one task per mapped source with per-source
-        partial results (the reference's only async mode). ``engine`` mode =
-        a single task running the composed cross-source query.
+        ``template`` mode = one task per mapped source — per replica
+        group of the entity's source plan, declared-order failover, so
+        mirrors answer once — with per-source partial results (the
+        reference's only async mode). ``engine`` mode = a single task
+        running the composed cross-source query.
         """
         if mode not in ("template", "engine"):
             raise ValueError(f"unknown mode {mode!r}")
@@ -138,43 +142,35 @@ class JobManager:
             t = QueryTask(task_id=uuid.uuid4().hex[:12],
                           relay=self.relay_name, source="__engine__")
             job.tasks[t.task_id] = t
-            plan = [(t, None, None)]
-            facts = None
+            work = [(t, None)]
         else:
-            # derived once here; each task reads its source entity's slice
-            facts = pushdown_facts(q, relay.entities, topk=False)
+            # one task per replica group of the entity's source plan
             entity = next(iter(q.entities))
-            plan = []
-            visited: set[tuple[str, str]] = set()
-
-            def visit(relay_name: str, ename: str) -> None:
-                key = (relay_name, ename)
-                if key in visited:
-                    return
-                visited.add(key)
-                r = self.web.relay(relay_name)
-                for source in r.sources_for_entity(ename):
+            facts = pushdown_facts(q, relay.entities, topk=False)
+            plan = plan_entity(self.web, self.relay_name, entity,
+                               facts.entity(entity))
+            work = []
+            for node, chain in plan.walk() if plan is not None else ():
+                for group in node.groups:
                     t = QueryTask(task_id=uuid.uuid4().hex[:12],
-                                  relay=relay_name, source=source.name)
+                                  relay=node.relay.name,
+                                  source=group[0].name)
                     job.tasks[t.task_id] = t
-                    plan.append((t, r, source))
-                for rm in r.remotes_for_entity(ename):
-                    visit(rm.peer, rm.remote_entity)
-
-            visit(self.relay_name, entity)
-            if not plan:
+                    work.append((t, (entity, node, chain, group)))
+            if not work:
                 raise ValidationError("query mapped to no sources")
 
         with self._lock:
             self._jobs[job.job_id] = job
-        for t, r, source in plan:
-            self._pool.submit(self._run_task, job, t, r, source, facts)
+        for t, leaf in work:
+            self._pool.submit(self._run_task, job, t, leaf)
         return job.job_id
 
     # -- worker ----------------------------------------------------------
 
-    def _run_task(self, job: QueryJob, task: QueryTask, relay, source,
-                  facts: PushdownFacts | None) -> None:
+    def _run_task(self, job: QueryJob, task: QueryTask, leaf) -> None:
+        """``leaf`` is ``(home entity, plan node, hop chain, replica
+        group)`` for a template task, None for the engine task."""
         if job.cancel_requested:
             if task.status == QUEUED:
                 task.status = CANCELLED
@@ -191,22 +187,19 @@ class JobManager:
             # Plan under the lock (temp views are session-global; analysis
             # binds the view into the DataFrame so execution can overlap).
             with self._lock:
-                if job.mode == "engine":
+                if leaf is None:
                     df = self.gateway.query(job.sql, job.principal)
                 else:
-                    entity = source.entity
-                    view = build_source_view(
-                        self.spark, relay, source, job.principal,
-                        conjuncts=facts.conjuncts.get(entity, []),
-                        limit=facts.limits.get(entity),
-                        referenced=facts.referenced)
-                    view.drop(PROVENANCE_RELAY, PROVENANCE_SOURCE) \
-                        .createOrReplaceTempView(entity)
-                    # may shadow a canonical table name — invalidate the
-                    # register_views memo (see session.view_memo_*)
-                    from dataweb_spark.session import view_memo_invalidate
-                    view_memo_invalidate(self.spark)
-                    df = self.spark.sql(job.sql)
+                    entity, node, chain, group = leaf
+
+                    def bind(source):
+                        df = bind_template_view(
+                            self.spark, node, chain, source,
+                            job.principal, entity, job.sql)
+                        task.source = source.name  # the member that answered
+                        return df
+
+                    df = failover(node.relay.name, group, bind)
             if job.cancel_requested:
                 # cancel landed during planning, before any Spark job
                 # existed for cancelJobGroup to interrupt

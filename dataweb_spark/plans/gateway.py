@@ -31,16 +31,16 @@ from dataweb_spark.plans.pruning import (
     extract_entity_predicates,
     extract_referenced_columns,
     output_shape_has_star,
-    source_can_match,
 )
 from dataweb_spark.plans.resolve import (
     PROVENANCE_RELAY,
     PROVENANCE_SOURCE,
+    EntityFacts,
+    SourcePlan,
     _apply_remote_mapping,
-    _map_conjuncts_through,
-    build_source_view,
+    failover,
+    plan_entity,
     register_entity_views,
-    resolve_entity,
 )
 from dataweb_spark.plans.topk import (
     GroupedTopKSpec,
@@ -112,16 +112,35 @@ def _engine_agg_candidate(relay, source) -> bool:
     return not src_sql or src_sql == "select * from {table}"
 
 
-def _decomposed_template(q: ParsedQuery, entity, ename: str,
-                         partial_aggregate: bool = True,
-                         topk_pushdown: bool = True):
-    """``(spec, forward_sql)`` — the template decomposition
-    ``QueryGateway.query`` fans out per source when the entity has a
-    whole-forwardable flight peer: partial aggregates, then flat top-k,
-    then grouped top-k, in the gateway's exact gating order. Every
-    ``spec`` merges the same way (``spec.merge(union_of_partials)``).
-    Shared with ``plans/explain.py`` so the EXPLAIN mirror can never
-    drift from what execution decides."""
+def template_route(relay, q: ParsedQuery,
+                   include_provenance: bool = False,
+                   allow_partial: bool = False,
+                   partial_aggregate: bool = True,
+                   topk_pushdown: bool = True):
+    """``(spec, forward_sql)`` when :meth:`QueryGateway.query` answers
+    ``q`` through the template path, else None — the one decision both
+    the query and EXPLAIN (``plans/explain.py``) read.
+
+    The template path needs a single-entity query, ``partial_aggregate``
+    or ``topk_pushdown`` on, and no provenance or ``allow_partial``; an
+    entity with a source that consumes a decomposed template better than
+    the row path — a whole-forwardable flight peer, or (r15) an external
+    SQL engine that can execute the partial aggregate ITSELF
+    (``dialects.render_partial_agg`` — the reference runs the whole
+    mapped SQL on the engine, ``trino.rs:103-190``); and a decomposition:
+    partial aggregates, then flat top-k, then grouped top-k, in this
+    order. Every ``spec`` merges the same way
+    (``spec.merge(union_of_partials)``)."""
+    if (not (partial_aggregate or topk_pushdown) or include_provenance
+            or allow_partial or len(q.entities) != 1):
+        return None
+    ename = next(iter(q.entities))
+    entity = relay.entities.get(ename)
+    if entity is None or not any(
+            _forwardable_flight_peer(relay, s, ename) is not None
+            or _engine_agg_candidate(relay, s)
+            for s in relay.sources_for_entity(ename)):
+        return None
     etypes = {i.name: i.data_type for i in entity.informations}
     if partial_aggregate:
         spec = extract_aggregate_query(
@@ -135,7 +154,40 @@ def _decomposed_template(q: ParsedQuery, entity, ename: str,
                 or extract_grouped_topk(q, ename, entity_types=etypes))
         if spec is not None:
             return spec, spec.forward_sql
-    return None, None
+    return None
+
+
+def forward_peer(node: SourcePlan, chain: tuple, source, star: bool):
+    """``(host, port, connection)`` when the template path forwards the
+    whole template to this source: a home-relay (empty hop ``chain``)
+    whole-forwardable flight peer, under a width-independent output
+    (``PushdownFacts.star`` off)."""
+    if chain or star:
+        return None
+    return _forwardable_flight_peer(node.relay, source, node.entity)
+
+
+def bind_template_view(spark: SparkSession, node: SourcePlan, chain: tuple,
+                       source, principal: str | None, entity_name: str,
+                       sql: str) -> DataFrame:
+    """One leaf source's template plan, shared by the template path and
+    template-mode jobs: the source view under the node's facts, mapped
+    back through the hop ``chain`` into the home entity's namespace (the
+    ``map_remote_request`` identifier-rewrite analog,
+    ``core/src/execute/map_remote.rs:17-63``), bound as the home
+    entity's temp view and analyzed with ``sql`` under
+    ``_VIEW_BIND_LOCK``."""
+    from dataweb_spark.session import view_memo_invalidate
+    view = node.scan(spark, source, principal)
+    for decl_relay, rm in reversed(chain):
+        view = _apply_remote_mapping(spark, decl_relay, rm, view)
+    with _VIEW_BIND_LOCK:
+        view.drop(PROVENANCE_RELAY, PROVENANCE_SOURCE) \
+            .createOrReplaceTempView(entity_name)
+        # may shadow a canonical table name — force the next
+        # register_views to rebind the raw views
+        view_memo_invalidate(spark)
+        return spark.sql(sql)
 
 
 @dataclass
@@ -159,6 +211,17 @@ class PushdownFacts:
     grouped: dict[str, GroupedTopKSpec]
     referenced: set[str] | None
     star: bool
+
+    def entity(self, name: str) -> EntityFacts:
+        """``name``'s slice of the facts, as :func:`plan_entity` takes
+        them: the order fact's k rides as the limit."""
+        ol = self.order_limits.get(name)
+        return EntityFacts(
+            conjuncts=self.conjuncts.get(name),
+            limit=ol[1] if ol else self.limits.get(name),
+            referenced=self.referenced,
+            order_by=ol[0] if ol else None,
+            grouped=self.grouped.get(name))
 
 
 def pushdown_facts(q: ParsedQuery, catalog: dict,
@@ -252,57 +315,43 @@ class QueryGateway:
         q = validate_sql(self.spark, sql, single_entity=False)
         entities = q.entities
         self.last_topk_groups = False
-        known = self.web.relay(self.relay_name).entities
+        relay = self.web.relay(self.relay_name)
+        known = relay.entities
         unknown = {e for e in entities if e not in known}
         if unknown:
             raise ValidationError(
                 f"unknown entity(ies): {sorted(unknown)}; "
                 f"relay {self.relay_name!r} declares {sorted(known)}")
-        if ((partial_aggregate or topk_pushdown)
-                and not include_provenance
-                and not allow_partial and len(entities) == 1):
-            ename = next(iter(entities))
-            relay = self.web.relay(self.relay_name)
-            # the template path fires when any source can consume a
-            # decomposed template better than the row path: a
-            # whole-forwardable flight peer, or (r15) an external SQL
-            # engine that can execute the partial aggregate ITSELF
-            # (dialects.render_partial_agg — the reference runs the
-            # whole mapped SQL on the engine, trino.rs:103-190)
-            if any(_forwardable_flight_peer(relay, s, ename) is not None
-                   or _engine_agg_candidate(relay, s)
-                   for s in relay.sources_for_entity(ename)):
-                spec, fwd = _decomposed_template(
-                    q, known[ename], ename, partial_aggregate,
-                    topk_pushdown)
-                if spec is not None:
-                    self.last_failures = []  # template fails loudly
-                    aspec = spec if isinstance(spec, AggQuerySpec) else None
-                    if topk_pushdown and aspec is not None:
-                        # "top groups": ORDER BY agg() LIMIT k over GROUP
-                        # BY runs the two-round bound protocol when the
-                        # exclusion is provable — wire O(k·sources) where
-                        # the partial merge below ships O(groups); an
-                        # unprovable bound falls through to that merge
-                        # (plans/topgroups.py)
-                        from dataweb_spark.plans.topgroups import (
-                            plan_topk_groups,
-                            run_topk_groups,
-                        )
-                        tg = plan_topk_groups(spec)
-                        if tg is not None:
-                            out = run_topk_groups(
-                                self.spark, tg,
-                                lambda s, rf=None:
-                                self.query_template_union(
-                                    s, principal, agg_spec=aspec,
-                                    agg_round=rf))
-                            if out is not None:
-                                self.last_topk_groups = True
-                                return out
-                    return spec.merge(
-                        self.query_template_union(fwd, principal,
-                                                  agg_spec=aspec))
+        route = template_route(relay, q, include_provenance,
+                               allow_partial, partial_aggregate,
+                               topk_pushdown)
+        if route is not None:
+            spec, fwd = route
+            self.last_failures = []  # template fails loudly
+            aspec = spec if isinstance(spec, AggQuerySpec) else None
+            if topk_pushdown and aspec is not None:
+                # "top groups": ORDER BY agg() LIMIT k over GROUP BY runs
+                # the two-round bound protocol when the exclusion is
+                # provable — wire O(k·sources) where the partial merge
+                # below ships O(groups); an unprovable bound falls
+                # through to that merge (plans/topgroups.py)
+                from dataweb_spark.plans.topgroups import (
+                    plan_topk_groups,
+                    run_topk_groups,
+                )
+                tg = plan_topk_groups(spec)
+                if tg is not None:
+                    out = run_topk_groups(
+                        self.spark, tg,
+                        lambda s, rf=None:
+                        self.query_template_union(
+                            s, principal, agg_spec=aspec,
+                            agg_round=rf))
+                    if out is not None:
+                        self.last_topk_groups = True
+                        return out
+            return spec.merge(
+                self.query_template_union(fwd, principal, agg_spec=aspec))
         # the row path: the order-limit and grouped top-k facts ride into
         # the source readers, and the final sql's own sort+limit or
         # window over the narrowed union is the merge
@@ -426,144 +475,60 @@ class QueryGateway:
     def _run_template_sources(self, sql, principal, entity_name, relay,
                               facts: PushdownFacts, agg_spec, agg_round
                               ) -> list[tuple[str, str, DataFrame]]:
-        """The per-source fan-out shared by the generic template path
-        and the cached-fact round path (r16): every behavior below —
-        forwarding, engine pushdown, replica failover, remote hops — is
-        ONE implementation for both."""
-        grouped_fact = facts.grouped.get(entity_name)
-        star_out = facts.star
+        """The per-source fan-out of the entity's source plan, shared by
+        the generic template path and the cached-fact round path (r16):
+        one partial per replica group (declared-order failover — scanning
+        every mirror would DOUBLE rows in every partial merge), each
+        leaf's view mapped back through its hop chain. Whole-template
+        forwarding and engine partials apply at the home relay only."""
+        plan = plan_entity(self.web, self.relay_name, entity_name,
+                           facts.entity(entity_name))
         etypes = {i.name: i.data_type
                   for i in relay.entities[entity_name].informations}
         results: list[tuple[str, str, DataFrame]] = []
-        visited: set[tuple[str, str]] = set()
 
-        def visit(relay_name: str, ename: str, conj: list,
-                  lim: int | None, ref: set[str] | None,
-                  chain: list, ol=None) -> None:
-            """``chain`` is the (declaring_relay, RemoteEntityMapping) hop
-            path from the home entity down to this relay — each peer source
-            view is mapped back into the home entity's namespace through it
-            (the ``map_remote_request`` identifier-rewrite analog,
-            ``core/src/execute/map_remote.rs:17-63``). ``conj``/``lim``/
-            ``ref`` are the pushdown facts, re-mapped (or conservatively
-            dropped) at every hop."""
-            key = (relay_name, ename)
-            if key in visited:
-                return
-            visited.add(key)
-            r = self.web.relay(relay_name)
-
-            def run_source(source) -> None:
-                if not chain and not star_out:
-                    fwd = _forwardable_flight_peer(r, source, ename)
-                    if fwd is not None:
-                        from dataweb_spark.sources.flight_service import (
-                            flight_forward_template,
-                        )
-                        from dataweb_spark.sources.readers import (
-                            flight_client_identity,
-                        )
-                        host, fport, fconn = fwd
-                        results.extend(flight_forward_template(
-                            self.spark, host, fport, sql, principal,
-                            template_base=(agg_spec.partial_sql()
-                                           if agg_spec is not None
-                                           else None),
-                            # protocol rounds are bounded by construction
-                            # and collected on the driver right after —
-                            # skip the executor fan-out (r16, guide §5)
-                            driver_pull=agg_round is not None,
-                            **flight_client_identity(fconn)))
-                        return
-                if not chain and agg_spec is not None:
-                    # r15: external SQL engines execute the partial
-                    # aggregate THEMSELVES when the renderer's gates
-                    # hold — O(groups) wire instead of the filtered
-                    # stream; a refusal keeps the generic path below.
-                    # (chain is empty here, so `r` IS the home relay and
-                    # the already-computed `etypes` applies.)
-                    from dataweb_spark.sources.readers import (
-                        engine_partial_frame,
-                    )
-                    edf = engine_partial_frame(self.spark, r, source,
-                                               agg_spec, etypes, agg_round)
-                    if edf is not None:
-                        results.append((relay_name, source.name, edf))
-                        return
-                view = build_source_view(
-                    self.spark, r, source, principal, conjuncts=conj,
-                    limit=(ol[1] if ol else lim),
-                    referenced=ref,
-                    order_by=(ol[0] if ol else None),
-                    grouped=(grouped_fact if not chain else None))
-                for decl_relay, rm in reversed(chain):
-                    view = _apply_remote_mapping(self.spark, decl_relay,
-                                                 rm, view)
-                from dataweb_spark.session import view_memo_invalidate
-                with _VIEW_BIND_LOCK:
-                    view.drop(PROVENANCE_RELAY, PROVENANCE_SOURCE) \
-                        .createOrReplaceTempView(entity_name)
-                    # may shadow a canonical table name — force the next
-                    # register_views to rebind the raw views
-                    view_memo_invalidate(self.spark)
-                    results.append((relay_name, source.name,
-                                    self.spark.sql(sql)))
-
-            # Replica groups: members declare IDENTICAL data, so exactly
-            # ONE is queried per group with declared-order failover —
-            # the row path (resolve_entity) has always done this; the
-            # template path scanning every mirror would DOUBLE rows in
-            # every partial merge (aggregates, top-k, grouped top-k) —
-            # r14 review catch. Ungrouped sources keep the original
-            # fail-loudly semantics (no try wrapper on singletons).
-            seen_groups: set[str] = set()
-            by_group: dict[str, list] = {}
-            for s in r.sources_for_entity(ename):
-                g = getattr(s, "replica_group", None)
-                if g is not None:
-                    by_group.setdefault(g, []).append(s)
-            for source in r.sources_for_entity(ename):
-                if (conj and source.bounds
-                        and not source_can_match(conj, source.bounds)):
-                    continue  # pruned endpoint: bounds disjoint from query
-                g = getattr(source, "replica_group", None)
-                if g is None:
-                    run_source(source)
-                    continue
-                if g in seen_groups:
-                    continue  # a preferred mirror already answered
-                seen_groups.add(g)
-                members = [s for s in by_group[g]
-                           if not (conj and s.bounds and
-                                   not source_can_match(conj, s.bounds))]
-                err = None
-                for member in members:
-                    try:
-                        run_source(member)
-                        break
-                    except Exception as e:  # noqa: BLE001 — failover
-                        err = e
-                else:
-                    if err is not None:
-                        raise err
-            for rm in r.remotes_for_entity(ename):
-                from dataweb_spark.plans.resolve import (
-                    _map_referenced_through,
-                    _template_trivial,
+        def run_source(node: SourcePlan, chain: tuple, source) -> None:
+            fwd = forward_peer(node, chain, source, facts.star)
+            if fwd is not None:
+                from dataweb_spark.sources.flight_service import (
+                    flight_forward_template,
                 )
-                # the order fact is DROPPED at remote hops: the hop's
-                # conjunct re-map is itself lossy/widening, which would
-                # under-fetch a deeper top-k; forwarded whole templates
-                # already carry ORDER BY + LIMIT to flight peers
-                visit(rm.peer, rm.remote_entity,
-                      _map_conjuncts_through(rm, conj),
-                      lim if _template_trivial(rm) else None,
-                      _map_referenced_through(rm, ref),
-                      chain + [(r, rm)])
+                from dataweb_spark.sources.readers import (
+                    flight_client_identity,
+                )
+                host, fport, fconn = fwd
+                results.extend(flight_forward_template(
+                    self.spark, host, fport, sql, principal,
+                    template_base=(agg_spec.partial_sql()
+                                   if agg_spec is not None else None),
+                    # protocol rounds are bounded by construction and
+                    # collected on the driver right after — skip the
+                    # executor fan-out (r16, guide §5)
+                    driver_pull=agg_round is not None,
+                    **flight_client_identity(fconn)))
+                return
+            if not chain and agg_spec is not None:
+                # r15: external SQL engines execute the partial aggregate
+                # THEMSELVES when the renderer's gates hold — O(groups)
+                # wire instead of the filtered stream; a refusal keeps
+                # the generic path below
+                from dataweb_spark.sources.readers import (
+                    engine_partial_frame,
+                )
+                edf = engine_partial_frame(self.spark, node.relay, source,
+                                           agg_spec, etypes, agg_round)
+                if edf is not None:
+                    results.append((node.relay.name, source.name, edf))
+                    return
+            results.append((node.relay.name, source.name,
+                            bind_template_view(self.spark, node, chain,
+                                               source, principal,
+                                               entity_name, sql)))
 
-        visit(self.relay_name, entity_name, facts.conjuncts[entity_name],
-              facts.limits.get(entity_name), facts.referenced, [],
-              ol=facts.order_limits.get(entity_name))
+        for node, chain in plan.walk() if plan is not None else ():
+            for group in node.groups:
+                failover(node.relay.name, group,
+                         lambda s: run_source(node, chain, s))
         return results
 
     def query_template_union(self, sql: str, principal: str | None = None,

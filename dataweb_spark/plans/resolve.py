@@ -19,9 +19,10 @@ Pipeline per local source (ordering mirrors ``map_local.rs:24-36``):
 4. provenance columns ``_source_relay_`` / ``_source_id_``
    (``rest_server/src/query/utils.rs:96-116``)
 
-Remote entities resolve recursively with a visited set — the cycle-dedup
-analog of the originator-UUID machinery (``core/src/crud/query.rs:21-60``,
-``flight_server/src/flight.rs:545-555``).
+Which sources answer, and what each receives, is decided once per query by
+:func:`plan_entity`: a pure tree of replica groups, pruned sources and
+remote hops (cycle-deduped, pushdown facts re-mapped at every hop) that the
+row path, the template path, template-mode jobs and EXPLAIN all fold.
 
 Scale design: every step is a *logical* view — no materialization, no
 driver-side rows. The union is ``unionByName(allowMissingColumns=True)``;
@@ -33,6 +34,7 @@ from __future__ import annotations
 
 import re
 import uuid
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -389,9 +391,191 @@ def _map_grouped_through(web: Web, relay: RelayCatalog,
                    entity_order=entity_order, forward_sql="")
 
 
+@dataclass(frozen=True)
+class EntityFacts:
+    """One entity's pushdown facts in one relay's namespace: the pruning
+    ``conjuncts``, the ``limit`` (a bare LIMIT, or the k of the top-k
+    ``order_by`` fact), the ``referenced`` columns (None = all), the
+    top-k ``order_by`` keys and the ``grouped`` top-k fact
+    (``plans/topk.py:GroupedTopKSpec``)."""
+    conjuncts: list | None = None
+    limit: int | None = None
+    referenced: set[str] | None = None
+    order_by: list | None = None
+    grouped: object = None
+
+
+@dataclass
+class SourcePlan:
+    """Which sources answer one (relay, entity) of a query, and what each
+    receives — the federation walk (``core/src/execute/mod.rs:98-139``)
+    as data, made once per query by :func:`plan_entity` and folded by the
+    row path, the template path, template-mode jobs and EXPLAIN.
+
+    ``facts`` are already in this relay's namespace. ``groups`` holds
+    the unpruned members of each replica group in preference order (an
+    ungrouped source is a group of one); ``pruned`` the sources whose
+    declared bounds are disjoint from the conjuncts; ``hops`` the
+    ``(RemoteEntityMapping, child plan)`` pairs."""
+    relay: RelayCatalog
+    entity: str
+    facts: EntityFacts
+    groups: list[list[DataSource]]
+    pruned: list[DataSource]
+    hops: list[tuple[RemoteEntityMapping, "SourcePlan"]]
+
+    def walk(self, chain: tuple = ()):
+        """``(node, chain)`` for this node and every node below it, in
+        walk order; ``chain`` is the ``(declaring relay, mapping)`` hop
+        path from the root down to the node."""
+        yield self, chain
+        for rm, child in self.hops:
+            yield from child.walk(chain + ((self.relay, rm),))
+
+    def scan(self, spark: SparkSession, source: DataSource,
+             principal: str | None = None) -> DataFrame:
+        """One source's view under this node's facts."""
+        f = self.facts
+        return build_source_view(spark, self.relay, source, principal,
+                                 conjuncts=f.conjuncts, limit=f.limit,
+                                 referenced=f.referenced,
+                                 order_by=f.order_by, grouped=f.grouped)
+
+
+def _replica_groups(sources: list[DataSource]) -> list[list[DataSource]]:
+    """Mirrored sources grouped: members of one ``replica_group`` declare
+    identical data, so exactly ONE is scanned (declared order =
+    preference). Each group sits at its first member's position."""
+    groups: list[list[DataSource]] = []
+    by_group: dict[str, list[DataSource]] = {}
+    for source in sources:
+        g = source.replica_group
+        if g is None:
+            groups.append([source])
+        elif g in by_group:
+            by_group[g].append(source)
+        else:
+            by_group[g] = [source]
+            groups.append(by_group[g])
+    return groups
+
+
+def plan_entity(web: Web, relay_name: str, entity_name: str,
+                facts: EntityFacts | None = None) -> SourcePlan | None:
+    """The source plan of one entity: its sources, local and
+    remote-recursive, with the facts each receives. Pure — no Spark call,
+    no I/O. None on a cycle or when nothing maps.
+
+    Cycles dedup with a visited set — the analog of the originator-UUID
+    machinery (``core/src/crud/query.rs:21-60``,
+    ``flight_server/src/flight.rs:545-555``). ``facts.conjuncts`` prune
+    sources whose declared ``bounds`` are provably disjoint from the
+    query — the federation analog of partition pruning (the reference
+    always scans every mapping).
+
+    At each remote hop the facts re-map into the peer entity's namespace
+    (the hop rule, applied here only): conjuncts and referenced columns
+    through the mapping, the top-k order and grouped facts when every
+    key survives the per-source monotonicity gates applied to the hop's
+    own mapping shape and every conjunct re-maps exactly (a lossy or
+    widening hop kills them: a deeper top-k over a re-mapped filter can
+    under-fetch, see ``readers._pushdown_parts``). When an order WAS set
+    but dies at the hop, the LIMIT dies with it — a top-k-derived limit
+    forwarded bare would make a deeper engine return k ARBITRARY rows as
+    if they were its top-k."""
+    from dataweb_spark.plans.pruning import source_can_match
+
+    visited: set[tuple[str, str]] = set()
+
+    def plan(relay_name: str, entity_name: str,
+             f: EntityFacts) -> SourcePlan | None:
+        if (relay_name, entity_name) in visited:
+            return None  # duplicate-request dedup (flight.rs:545-555)
+        visited.add((relay_name, entity_name))
+        relay = web.relay(relay_name)
+        if entity_name not in relay.entities:
+            raise KeyError(
+                f"relay {relay_name!r} has no entity {entity_name!r}")
+        conj = f.conjuncts
+        live, pruned = [], []
+        for source in relay.sources_for_entity(entity_name):
+            if conj and source.bounds and not source_can_match(
+                    conj, source.bounds):
+                pruned.append(source)
+            else:
+                live.append(source)
+        hops = []
+        for rm in relay.remotes_for_entity(entity_name):
+            order = _map_order_through(web, relay, rm, f.order_by, conj)
+            child = plan(rm.peer, rm.remote_entity, EntityFacts(
+                conjuncts=_map_conjuncts_through(rm, conj),
+                limit=(f.limit if _template_trivial(rm)
+                       and (f.order_by is None or order is not None)
+                       else None),
+                referenced=_map_referenced_through(rm, f.referenced),
+                order_by=order,
+                grouped=_map_grouped_through(web, relay, rm, f.grouped,
+                                             conj)))
+            if child is not None:
+                hops.append((rm, child))
+        if not live and not pruned and not hops:
+            return None
+        return SourcePlan(relay, entity_name, f, _replica_groups(live),
+                          pruned, hops)
+
+    return plan(relay_name, entity_name, facts or EntityFacts())
+
+
+def failover(relay_name: str, group: list[DataSource], build,
+             failures: list | None = None):
+    """``build(source)`` for the first member of a replica group that
+    builds, in preference order; each member that raises is recorded in
+    ``failures`` (if given) as ``(relay, source, error)``. Raises the
+    last error when every member fails — for a singleton group, the one
+    source's own error."""
+    err = None
+    for source in group:
+        try:
+            return build(source)
+        except Exception as e:  # noqa: BLE001 — replica failover
+            err = e
+            if failures is not None:
+                failures.append((relay_name, source.name, str(e)))
+    raise err
+
+
+def _union_frame(spark: SparkSession, plan: SourcePlan,
+                 principal: str | None, allow_partial: bool,
+                 failures: list | None) -> DataFrame | None:
+    """The row-path fold of a source plan: one view per replica group
+    (with failover), each hop's child union mapped into this relay's
+    namespace — over the peer's UNION, so a non-trivial ``sql_template``
+    keeps its meaning."""
+    parts: list[DataFrame] = []
+    for group in plan.groups:
+        try:
+            parts.append(failover(
+                plan.relay.name, group,
+                lambda s: plan.scan(spark, s, principal), failures))
+        except Exception:
+            if not allow_partial:
+                raise
+    for rm, child in plan.hops:
+        peer_df = _union_frame(spark, child, principal, allow_partial,
+                               failures)
+        if peer_df is not None:
+            parts.append(_apply_remote_mapping(spark, plan.relay, rm,
+                                               peer_df))
+    if not parts:
+        return None
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p, allowMissingColumns=True)
+    return out
+
+
 def resolve_entity(spark: SparkSession, web: Web, relay_name: str,
                    entity_name: str, principal: str | None = None,
-                   _visited: set[tuple[str, str]] | None = None,
                    conjuncts: list | None = None,
                    allow_partial: bool = False,
                    failures: list[tuple[str, str, str]] | None = None,
@@ -401,14 +585,8 @@ def resolve_entity(spark: SparkSession, web: Web, relay_name: str,
                    grouped=None
                    ) -> DataFrame | None:
     """Resolve an entity to the union of all its mapped sources, local and
-    remote-recursive. Returns None if this (relay, entity) was already
-    visited (cycle) or maps to nothing.
-
-    ``conjuncts`` (from ``pruning.extract_entity_predicates``) enables
-    source-level pruning: a source whose declared ``bounds`` are provably
-    disjoint from the query's predicates is dropped from the union — the
-    federation analog of partition pruning (the reference always scans every
-    mapping, ``core/src/execute/mod.rs:98-139``).
+    remote-recursive (:func:`plan_entity` under these pushdown facts).
+    Returns None when nothing maps.
 
     ``allow_partial`` replicates the reference's peer-failure policy
     (failures logged and skipped, partial results proceed —
@@ -416,99 +594,12 @@ def resolve_entity(spark: SparkSession, web: Web, relay_name: str,
     built (missing path, bad SQL, unreachable engine) is dropped from the
     union instead of failing the query; ``failures`` (if given) collects
     ``(relay, source, error)`` for the caller's status surface."""
-    from dataweb_spark.plans.pruning import source_can_match
-
-    visited = _visited if _visited is not None else set()
-    key = (relay_name, entity_name)
-    if key in visited:
-        return None  # duplicate-request dedup (flight.rs:545-555)
-    visited.add(key)
-
-    relay = web.relay(relay_name)
-    if entity_name not in relay.entities:
-        raise KeyError(f"relay {relay_name!r} has no entity {entity_name!r}")
-
-    # Group mirrored sources: members of one replica_group declare
-    # identical data, so exactly ONE is scanned (declared order =
-    # preference) with failover to the next on build error. Ungrouped
-    # sources stay singleton groups with the original semantics.
-    groups: list[list] = []
-    by_group: dict[str, list] = {}
-    for source in relay.sources_for_entity(entity_name):
-        g = getattr(source, "replica_group", None)
-        if g is None:
-            groups.append([source])
-        elif g in by_group:
-            by_group[g].append(source)
-        else:
-            by_group[g] = [source]
-            groups.append(by_group[g])
-
-    parts: list[DataFrame] = []
-    for group in groups:
-        members = [s for s in group
-                   if not (conjuncts and s.bounds
-                           and not source_can_match(conjuncts, s.bounds))]
-        if not members:
-            continue  # provably no matching rows in this source/replica set
-        built, err, failed_over = None, None, []
-        for source in members:
-            try:
-                built = build_source_view(spark, relay, source, principal,
-                                          conjuncts=conjuncts, limit=limit,
-                                          referenced=referenced,
-                                          order_by=order_by,
-                                          grouped=grouped)
-                break
-            except Exception as e:  # noqa: BLE001 — replica failover
-                err = e
-                failed_over.append((relay_name, source.name, str(e)))
-        if failures is not None:
-            failures.extend(failed_over)
-        if built is not None:
-            parts.append(built)
-        elif not allow_partial:
-            # every member of the group failed (for a singleton, the one
-            # source) — original partial-failure policy applies
-            raise err
-    for rm in relay.remotes_for_entity(entity_name):
-        # top-k facts compose across the hop when every key survives the
-        # per-source monotonicity gates applied to the hop's OWN mapping
-        # shape and every conjunct re-maps exactly (r15 — previously the
-        # facts died at every non-trivial hop; a lossy/widening hop still
-        # kills them: a deeper top-k over a re-mapped filter can
-        # under-fetch, see readers._pushdown_parts). When an order WAS
-        # set but dies here, the LIMIT dies with it — a top-k-derived
-        # limit forwarded bare would make a deeper engine return k
-        # ARBITRARY rows as if they were its top-k (r13 review fix; the
-        # legacy bare-limit slot only ever carried extract_entity_limit
-        # values, which never fire under a Sort)
-        peer_order = _map_order_through(web, relay, rm, order_by,
-                                        conjuncts)
-        peer_grouped = _map_grouped_through(web, relay, rm, grouped,
-                                            conjuncts)
-        peer_df = resolve_entity(spark, web, rm.peer, rm.remote_entity,
-                                 principal, visited,
-                                 conjuncts=_map_conjuncts_through(rm, conjuncts),
-                                 allow_partial=allow_partial,
-                                 failures=failures,
-                                 limit=(limit if _template_trivial(rm)
-                                        and (order_by is None
-                                             or peer_order is not None)
-                                        else None),
-                                 referenced=_map_referenced_through(
-                                     rm, referenced),
-                                 order_by=peer_order,
-                                 grouped=peer_grouped)
-        if peer_df is not None:
-            parts.append(_apply_remote_mapping(spark, relay, rm, peer_df))
-
-    if not parts:
+    plan = plan_entity(web, relay_name, entity_name,
+                       EntityFacts(conjuncts, limit, referenced, order_by,
+                                   grouped))
+    if plan is None:
         return None
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p, allowMissingColumns=True)
-    return out
+    return _union_frame(spark, plan, principal, allow_partial, failures)
 
 
 def register_entity_views(spark: SparkSession, web: Web, relay_name: str,
@@ -571,21 +662,12 @@ def register_entity_views(spark: SparkSession, web: Web, relay_name: str,
 
 def _entity_row_estimate(relay: RelayCatalog, entity_name: str) -> int | None:
     """Collected-stats row estimate for an entity view: the sum of
-    ``DataSource.stat_rows`` over its local sources (replica mirrors
-    counted once), or None when any source lacks stats or the entity has
-    remote branches (a peer's volume is its own business — never assume a
-    remote is small)."""
+    ``DataSource.stat_rows`` over its local sources (one member per
+    replica group), or None when any counted source lacks stats or the
+    entity has remote branches (a peer's volume is its own business —
+    never assume a remote is small)."""
     if relay.remotes_for_entity(entity_name):
         return None
-    seen_groups: set[str] = set()
-    total = 0
-    for s in relay.sources_for_entity(entity_name):
-        g = getattr(s, "replica_group", None)
-        if g is not None:
-            if g in seen_groups:
-                continue
-            seen_groups.add(g)
-        if s.stat_rows is None:
-            return None
-        total += s.stat_rows
-    return total
+    rows = [g[0].stat_rows
+            for g in _replica_groups(relay.sources_for_entity(entity_name))]
+    return None if None in rows else sum(rows)

@@ -109,8 +109,9 @@ def test_gateway_explain_and_limit_forwarding(spark, demo_web):
 def test_explain_reports_forwarded_order(spark, sf_dir):
     """The explain surface mirrors the r13 top-k execution facts: a
     provable ORDER BY + LIMIT shows per-source forwarded_order +
-    forwarded_limit, and a remote hop drops BOTH (a bare top-k-derived
-    limit at a deeper engine would fetch k arbitrary rows)."""
+    forwarded_limit. Both compose across an identity remote hop; a lossy
+    hop drops BOTH (a bare top-k-derived limit at a deeper engine would
+    fetch k arbitrary rows)."""
     import json as _json
 
     from dataweb_spark.catalog.model import (DataConnection, DataSource,
@@ -367,3 +368,117 @@ def test_explain_join_derives_facts_once(spark, demo_web, monkeypatch):
     entities = {r.entity for r in df.collect()}
     assert entities == {"customer", "orders"}
     assert len(calls) == 1
+
+
+def _three_source_web(sf_dir):
+    """Home entity ``t`` over a local file source, an identity flight peer
+    (whole-forwardable; nothing listens on it) and an identity remote
+    hop to ``peer.t2``."""
+    from dataweb_spark.catalog.model import (DataConnection, DataSource,
+                                             Entity, Information, Mapping,
+                                             RelayCatalog, RemoteEntityMapping,
+                                             Web)
+    infos = [Information("v", "bigint"), Information("w", "bigint")]
+    home = RelayCatalog(name="home")
+    home.add_entity(Entity("t", infos))
+    home.add_connection(DataConnection("files", "file", {"path": sf_dir}))
+    home.add_connection(DataConnection("pf", "flight", {"port": "1"}))
+    home.add_source(DataSource(
+        name="local_src", connection="files", entity="t",
+        source_sql="select * from {table}",
+        mappings=[Mapping("v", "n_nationkey"), Mapping("w", "n_regionkey")],
+        options={"table": "nation.parquet"}))
+    home.add_source(DataSource(
+        name="flight_src", connection="pf", entity="t",
+        source_sql="select * from {table}",
+        mappings=[Mapping("v", "v"), Mapping("w", "w")],
+        options={"entity": "t"}))
+    peer = RelayCatalog(name="peer")
+    peer.add_entity(Entity("t2", infos))
+    peer.add_connection(DataConnection("files", "file", {"path": sf_dir}))
+    peer.add_source(DataSource(
+        name="peer_src", connection="files", entity="t2",
+        source_sql="select * from {table}",
+        mappings=[Mapping("v", "n_nationkey"), Mapping("w", "n_regionkey")],
+        options={"table": "nation.parquet"}))
+    home.remote_mappings.append(RemoteEntityMapping(
+        local_entity="t", peer="peer", remote_entity="t2"))
+    web = Web()
+    web.add_relay(home)
+    web.add_relay(peer)
+    return web
+
+
+@pytest.mark.parametrize("sql", [
+    "select v, w from t where v < 20 order by v desc, w limit 4",
+    "select v, w, rk from (select v, w, row_number() over (partition by w "
+    "order by v desc) as rk from t where v < 20) where rk <= 2",
+    "select w, count(*) as n, sum(v) as s from t where v < 20 group by w",
+], ids=["flat_topk", "grouped_topk", "aggregate"])
+def test_explain_reports_what_execution_passes(spark, sf_dir, monkeypatch,
+                                               sql):
+    """Per (relay, source), EXPLAIN's forwarded_order, forwarded_limit and
+    forwarded_grouped equal the facts execution hands that source's
+    view, on the row path (provenance on) and on the template path, and
+    the scanned sources are the ones execution builds."""
+    from dataweb_spark.plans import gateway, resolve
+    from dataweb_spark.plans.gateway import QueryGateway
+    from dataweb_spark.sources import flight_service
+    from dataweb_spark.sources.readers import _pushdown_parts
+
+    web = _three_source_web(sf_dir)
+    calls = {}
+    real = resolve.build_source_view
+
+    def recording(spark_, relay, source, principal=None, **facts):
+        calls[(relay.name, source.name)] = (source, facts)
+        if source.name == "flight_src":  # no peer listens: empty branch
+            return real(spark_, relay, relay.sources["local_src"],
+                        principal).where("false")
+        return real(spark_, relay, source, principal, **facts)
+
+    for mod in (resolve, gateway):
+        if hasattr(mod, "build_source_view"):
+            monkeypatch.setattr(mod, "build_source_view", recording)
+    monkeypatch.setattr(flight_service, "flight_forward_template",
+                        lambda *a, **k: [])
+
+    def passed(source, facts):
+        _c, _k, limit, _p, order, grouped = _pushdown_parts(
+            source, facts.get("conjuncts"), facts.get("limit"),
+            facts.get("referenced"), facts.get("order_by"),
+            facts.get("grouped"))
+        return {"forwarded_limit": limit,
+                "forwarded_order": (json.dumps([[c, d, n]
+                                                for c, d, n in order])
+                                    if order else None),
+                "forwarded_grouped": (json.dumps(
+                    {"fn": grouped[0], "bound": grouped[1],
+                     "partition": grouped[2],
+                     "order": [[c, d, n] for c, d, n in grouped[3]]})
+                    if grouped else None)}
+
+    gw = QueryGateway(spark, web, "home")
+    answers = {}
+    for flags in ({"include_provenance": True}, {}):
+        calls.clear()
+        df = gw.query(sql, **flags)
+        answers[bool(flags)] = sorted(
+            tuple(r[c] for c in df.columns if not c.startswith("_source"))
+            for r in df.collect())
+        report = {(r["relay"], r["source"]): r.asDict()
+                  for r in gw.explain(sql, **flags).collect()}
+        scanned = {k for k, r in report.items() if r["action"] == "scan"}
+        assert scanned == set(calls), (flags, report)
+        assert ("peer", "peer_src") in scanned
+        for key, (source, facts) in calls.items():
+            want = passed(source, facts)
+            got = {c: report[key][c] for c in want}
+            assert got == want, (flags, key)
+        if not flags:
+            assert report[("home", "flight_src")]["action"] == \
+                "forward-template"
+    ref = gw.query(sql, partial_aggregate=False, topk_pushdown=False)
+    want = sorted(tuple(r[c] for c in ref.columns) for r in ref.collect())
+    assert answers[False] == want
+    assert answers[True] == want

@@ -307,3 +307,96 @@ def test_task_status_records_elapsed_time(manager):
     assert st["status"] == COMPLETE
     for t in st["tasks"]:
         assert t["elapsed_s"] is not None and t["elapsed_s"] > 0
+
+
+# -- template jobs run the same source plan as the template path -----------
+
+def test_template_job_one_task_per_replica_group(spark, sf_dir, tmp_path):
+    """Mirrors of one replica_group declare identical data: a template
+    job runs ONE task for the group (the preferred member), so its
+    partials add up to the template union's instead of doubling it."""
+    from pyspark.sql import functions as F
+
+    from dataweb_spark.catalog.model import (
+        DataConnection, DataField, DataSource, Entity, Information, Mapping,
+        RelayCatalog, Web,
+    )
+    r = RelayCatalog(name="home")
+    r.add_entity(Entity("t", [Information("v", "bigint")]))
+    r.add_connection(DataConnection("files", "file",
+                                    {"path": sf_dir, "format": "parquet"}))
+    for name in ("mirror_a", "mirror_b"):
+        r.add_source(DataSource(
+            name=name, connection="files", entity="t",
+            source_sql="select * from {table}",
+            fields=[DataField("r_regionkey", "r_regionkey")],
+            mappings=[Mapping("v", "r_regionkey")],
+            options={"table": "region.parquet"}, replica_group="regions"))
+    m = JobManager(spark, Web(relays={"home": r}), "home",
+                   results_dir=str(tmp_path))
+    try:
+        sql = "select count(*) as n from t"
+        job_id = m.submit(sql)
+        st = m.wait(job_id)
+        assert st["status"] == COMPLETE
+        assert [(t["relay"], t["source"]) for t in st["tasks"]] == \
+            [("home", "mirror_a")]
+        total = m.result(job_id).agg(F.sum("n")).first()[0]
+        union = m.gateway.query_template_union(sql) \
+            .agg(F.sum("n")).first()[0]
+        assert total == union == 5
+    finally:
+        m.shutdown()
+
+
+def test_template_job_maps_remote_hop(spark, sf_dir, tmp_path):
+    """A job over a renamed ×10 hop (home ``t.key10`` = peer ``t2.k`` × 10)
+    binds the home entity's view through the hop's mapping, exactly like
+    the template path: with no ``t`` view left over from an earlier
+    query, its result equals ``query_template_union`` over the same SQL."""
+    from dataweb_spark.catalog.model import (
+        DataConnection, DataField, DataSource, Entity, Information, Mapping,
+        RelayCatalog, RemoteEntityMapping, RemoteInfoMapping, Transformation,
+        Web,
+    )
+    peer = RelayCatalog(name="peer")
+    peer.add_entity(Entity("t2", [Information("k", "bigint"),
+                                  Information("name", "string")]))
+    peer.add_connection(DataConnection("files", "file",
+                                       {"path": sf_dir, "format": "parquet"}))
+    peer.add_source(DataSource(
+        name="p_src", connection="files", entity="t2",
+        source_sql="select * from {table}",
+        fields=[DataField("n_nationkey", "n_nationkey"),
+                DataField("n_name", "n_name")],
+        mappings=[Mapping("k", "n_nationkey"), Mapping("name", "n_name")],
+        options={"table": "nation.parquet"}))
+    home = RelayCatalog(name="home")
+    home.add_entity(Entity("t", [Information("key10", "bigint"),
+                                 Information("name", "string")]))
+    home.remote_mappings.append(RemoteEntityMapping(
+        local_entity="t", peer="peer", remote_entity="t2",
+        info_mappings=[RemoteInfoMapping(
+            "key10", "k", Transformation("{v} * 10", "{v} / 10"))]))
+    web = Web()
+    web.add_relay(peer)
+    web.add_relay(home)
+
+    spark.catalog.dropTempView("t")
+    m = JobManager(spark, web, "home", results_dir=str(tmp_path))
+    try:
+        sql = "select key10, name from t where key10 < 50"
+        job_id = m.submit(sql)
+        st = m.wait(job_id)
+        assert st["status"] == COMPLETE, st
+        assert [(t["relay"], t["source"]) for t in st["tasks"]] == \
+            [("peer", "p_src")]
+        cols = ["key10", "name", "_source_relay_", "_source_id_"]
+        got = sorted(tuple(r) for r in m.result(job_id).select(*cols)
+                     .collect())
+        want = sorted(tuple(r) for r in m.gateway.query_template_union(sql)
+                      .select(*cols).collect())
+        assert got == want
+        assert [r[0] for r in got] == [0, 10, 20, 30, 40]
+    finally:
+        m.shutdown()
